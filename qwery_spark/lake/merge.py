@@ -1,9 +1,10 @@
-"""Bucket-pruned copy-on-write MERGE (the engine's UPSERT KEYED ON).
+"""Keyed writes into a lake table: the engine's UPSERT / UPDATE KEYED ON.
 
-Set-oriented restatement of qwery's row-at-a-time UPSERT
-(reference: app/jvm/core/.../ops/sql/Upsert.scala:14-33 — INSERT, and on
-duplicate-key error UPDATE ... KEYED ON, i.e. last writer in stream
-order wins). Here a whole micro-batch is applied at once:
+Set-oriented restatement of qwery's row-at-a-time UPSERT (reference:
+app/jvm/core/.../ops/sql/Upsert.scala:14-33 — INSERT, and on a
+duplicate key UPDATE, i.e. the last writer in stream order wins) and
+of its matched-only UPDATE (core:ops/sql/Update.scala:19-44). A whole
+micro-batch is applied at once, with the guard of
 
   MERGE INTO target t USING deduped_batch s ON t.doc_id = s.doc_id
     WHEN MATCHED AND s.ordinal > t.last_ordinal AND s.op='D'
@@ -12,18 +13,30 @@ order wins). Here a whole micro-batch is applied at once:
     WHEN NOT MATCHED THEN INSERT (or tombstone for a delete of an
          unseen key — keeps the cross-batch LWW guard airtight)
 
-Scale properties:
-  * the batch arrives deduped to ONE row per key (see cdc.dedup), so
-    both join sides are key-unique — no skew possible in this join.
-  * scan pruning: only the buckets the batch touches are read and
-    rewritten; untouched buckets carry over by manifest reference.
-    At 100 TB / 4096 buckets, a batch touching 1% of keyspace rewrites
-    ~41 buckets, not the table.
-  * stale events (ordinal <= last_ordinal) are dropped by the guard —
-    cross-batch stragglers cannot clobber newer rows, and tombstones
-    block resurrection after delete.
-  * exactly-once: the commit is epoch-keyed; re-delivery of a batch
-    after a crash-before-checkpoint is a metadata no-op.
+Two write paths:
+
+  * ``append_changes`` (merge-on-read): one shuffle on the bucket,
+    LWW-dedup per key, append the winners as delta files. No target
+    read; reads resolve the deltas by max ordinal until ``compact``.
+  * ``merge_changes`` (copy-on-write): rewrite exactly the buckets the
+    batch touches, in one of two arms —
+      - **lww** (default): union the touched buckets' rows with the
+        batch shaped as delta rows and keep the max-(ordinal,
+        target-wins-ties) row per key in one bucket shuffle, no join.
+        On an empty target the batch (one row per key) is written as
+        is, with no target read and no aggregate.
+      - **broadcast**: when the manifest row counts of the touched
+        buckets exceed ``LWW_MAX_TARGET_ROWS`` and the cached batch
+        fits ``BROADCAST_MAX_ROWS`` / ``BROADCAST_MAX_BYTES``, a
+        broadcast left join keeps the big target side from shuffling,
+        and a broadcast anti join adds the inserts.
+    The arm that ran is recorded as ``merge_arm`` in the commit summary.
+
+Scale properties: the batch is key-unique (see cdc.dedup), so no key is
+skewed; only touched buckets are read and rewritten (at 4096 buckets a
+batch touching 1% of the keyspace rewrites ~41 buckets); stale events
+(ordinal <= last_ordinal) lose to the stored row and tombstones block
+resurrection; commits are epoch-keyed, so re-delivery is a no-op.
 
 On a real cluster this file collapses to an Iceberg
 ``MERGE INTO ... WHEN MATCHED AND s.ordinal > t.last_ordinal ...``
@@ -42,6 +55,17 @@ from pyspark.sql import functions as F
 from qwery_spark.lake.table import DATA_DIR, LakeTable, Snapshot
 
 ENGINE_COLS = ("last_ordinal", "_deleted")
+
+# merge_changes arm gate. Up to this many manifest rows in the touched
+# buckets, one union+LWW shuffle of target + batch beats the broadcast
+# arm's persist, matched-keys pass and anti join.
+LWW_MAX_TARGET_ROWS = 8_000_000
+# above it, the broadcast arm runs while the cached batch fits these
+BROADCAST_MAX_ROWS = 4_000_000
+BROADCAST_MAX_BYTES = 256 << 20
+
+# per-row MERGE actions counted on the write job into MergeStats
+_ACTS = ("up", "del", "stale")
 
 # wall-clock of the LAST _stage_write, split into the Spark write job
 # vs the driver-side footer-stats pass — a pure instrumentation hook
@@ -73,25 +97,67 @@ class MergeStats:
     summary: dict = field(default_factory=dict)
 
 
-def _user_fields(snap: Snapshot) -> list[dict]:
-    return [f for f in snap.fields() if f["name"] not in ENGINE_COLS]
+def _payload(snap: Snapshot) -> list[dict]:
+    """The user columns other than the key."""
+    skip = (snap.m["key_col"], *ENGINE_COLS)
+    return [f for f in snap.fields() if f["name"] not in skip]
+
+
+def _bucket_of(key: str, n_buckets: int):
+    return F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets)).cast("int")
 
 
 def _align_batch(batch: DataFrame, snap: Snapshot, key: str):
     """Project a change batch onto the current user schema (null-fill
     newly added columns, cast widened ones) + derive the bucket."""
-    ufields = _user_fields(snap)
     have = set(batch.columns)
     sel = [F.col(key), F.col("op"), F.col("ordinal").cast("bigint").alias("ordinal")]
-    for f in ufields:
-        if f["name"] == key:
-            continue
+    for f in _payload(snap):
         if f["name"] in have:
             sel.append(F.col(f"`{f['name']}`").cast(f["type"]).alias(f["name"]))
         else:
             sel.append(F.lit(None).cast(f["type"]).alias(f["name"]))
-    return batch.select(*sel).withColumn(
-        "_bucket", F.pmod(F.xxhash64(F.col(key)), F.lit(snap.n_buckets)).cast("int")
+    return batch.select(*sel).withColumn("_bucket", _bucket_of(key, snap.n_buckets))
+
+
+def _delta_rows(src: DataFrame, key: str, payload: list[dict]) -> DataFrame:
+    """An aligned batch as physical rows: a delete becomes a tombstone
+    (null payload, ``_deleted``), the event ordinal its last_ordinal."""
+    is_delete = F.col("op") == "D"
+    return src.select(
+        F.col(key),
+        *[
+            F.when(is_delete, F.lit(None).cast(f["type"]))
+            .otherwise(F.col(f"`{f['name']}`"))
+            .alias(f["name"])
+            for f in payload
+        ],
+        F.col("ordinal").alias("last_ordinal"),
+        is_delete.alias("_deleted"),
+        F.col("_bucket"),
+    )
+
+
+def _write_act():
+    """The ``_act`` of a row that is written unopposed."""
+    return F.when(F.col("_deleted"), "del").otherwise("up")
+
+
+def _lww(rows: DataFrame, key: str, order, *aggs) -> DataFrame:
+    """One row per (bucket, key): the max-``order`` row, flattened back
+    to ``rows``' columns, plus ``aggs``. The caller's bucket repartition
+    already satisfies this grouping's clustering, so the aggregate adds
+    no second exchange."""
+    carry = [c for c in rows.columns if c not in (key, "_bucket")]
+    w = rows.groupBy("_bucket", key).agg(
+        F.max_by(F.struct(*[F.col(f"`{c}`") for c in carry]), order).alias("w"),
+        *aggs,
+    )
+    return w.select(
+        F.col(key),
+        *[F.col(f"w.`{c}`").alias(c) for c in carry],
+        F.col("_bucket"),
+        *[c for c in w.columns if c not in (key, "_bucket", "w")],
     )
 
 
@@ -165,9 +231,9 @@ def _stage_write(
             if stats_col is not None and stats_col in fstats:
                 entry["key_min"], entry["key_max"] = fstats[stats_col]
             elif stats_col is not None and fstats.get(f"__all_null__{stats_col}"):
-                # the file carries ONLY null keys (possible when the
-                # sub-bucket split isolates them): null keys emit no
-                # change rows, so pruning may skip this file entirely
+                # the file carries ONLY null keys (a bucket, or a
+                # maxRecordsPerFile split of one, holding nothing else):
+                # null keys emit no change rows, so pruning may skip it
                 entry["key_all_null"] = True
             if "__num_rows" in fstats:
                 entry["rows"] = fstats["__num_rows"]
@@ -183,12 +249,6 @@ def _stage_write(
         write_sec=_t1 - _t0, footer_sec=_time.monotonic() - _t1
     )
     return new_files
-
-
-def _footer_min_max(path: str, col: str):
-    """(min, max) of one column from the parquet footer (None when not
-    skippable). Thin wrapper over _footer_stats."""
-    return _footer_stats(path, [col]).get(col)
 
 
 def _footer_stats(path: str, cols: list[str]) -> dict:
@@ -254,57 +314,69 @@ def _footer_stats(path: str, cols: list[str]) -> dict:
     return out
 
 
-def _subsplit_factor(
-    spark: SparkSession, n_buckets: int, batch: DataFrame | None = None
-) -> int:
-    """How many key-derived sub-buckets to split each bucket into for
-    the ONE append/dedup shuffle. The split key is a SECOND independent
-    hash of the table key — pmod(xxhash64(seed, key), S) — so rows of
-    one (bucket, key) still land in one task (the LWW groupBy needs
-    that clustering).
+def _write_commit(
+    table: LakeTable,
+    snap: Snapshot,
+    rows: DataFrame,
+    epoch_id,
+    collect_stats: bool,
+    max_records_per_file: int,
+    operation: str,
+    touched: set | None = None,
+    **summary,
+) -> MergeStats:
+    """The one tail of every keyed write: count ``rows``' per-row
+    ``_act`` (up/del/stale) on the write job itself, write the
+    already-bucket-partitioned rows, commit, fill MergeStats.
+    ``operation`` "append-delta" appends delta files to the buckets
+    written; "merge" rewrites ``touched`` (default: the buckets
+    written), and an empty merge result commits nothing."""
+    counts = [F.sum((F.col("_act") == a).cast("int")).alias(a) for a in _ACTS]
+    plain = rows
+    obs = None
+    if collect_stats:
+        from pyspark.sql import Observation
 
-    DEFAULT 1 — the split is a measured net loss. The widened arm
-    (S = parallelism/buckets, capped 16) wins the isolated append's
-    shuffle STAGE when a table has fewer buckets than the cluster has
-    cores, but per-QUERY interleaved A/B at sf0.1 AND 10x scale
-    (round 7, second pass) showed it loses query-wide at BOTH scales:
-    S write tasks per bucket emit S delta files per bucket per epoch,
-    and every later read of the table — MOR resolution, changelog
-    endpoint diffs, compaction, the final view read — pays the S-fold
-    file count back with interest (5-20% per lifecycle query). A
-    stage-isolated win that a whole-query instrument reverses is guide
-    §1.1's empirical-loop lesson. On a real cluster with hundreds of
-    executors against a small-bucket table the trade can flip again —
-    QWERY_SUBSPLIT=max restores the widened arm for that A/B
-    (=aqe additionally lets AQE size the exchange from actual shuffle
-    bytes; =0 pins 1 explicitly)."""
-    mode = os.environ.get("QWERY_SUBSPLIT")  # A/B instrument
-    if mode in ("max", "aqe"):
-        par = spark.sparkContext.defaultParallelism
-        return max(1, min(16, -(-par // max(n_buckets, 1))))
-    return 1
-
-
-def _layout_shuffle(
-    spark: SparkSession,
-    n_buckets: int,
-    src: DataFrame,
-    key: str,
-    est_batch: DataFrame | None = None,
-) -> DataFrame:
-    """The ONE dedup+layout shuffle shared by append/merge/write paths:
-    add the sub-bucket key and repartition on (_bucket, _sub). Default
-    width = n_buckets (see _subsplit_factor); QWERY_SUBSPLIT=max widens
-    to the parallelism cap, =aqe drops the explicit width so AQE's
-    partition coalescing sizes the exchange from the ACTUAL shuffle
-    bytes (advisoryPartitionSizeInBytes)."""
-    sub_n = _subsplit_factor(spark, n_buckets, est_batch)
-    src = src.withColumn(
-        "_sub", F.pmod(F.xxhash64(F.lit(1), F.col(key)), F.lit(sub_n)).cast("int")
+        obs = Observation()
+        rows = rows.observe(obs, *counts)
+    new_files = _stage_write(
+        rows.drop("_act"), table, snap.schema_version, snap.n_buckets,
+        max_records_per_file, repartition=False, stats_col=snap.m["key_col"],
     )
-    if sub_n > 1 and os.environ.get("QWERY_SUBSPLIT") == "aqe":
-        return src.repartition("_bucket", "_sub")
-    return src.repartition(n_buckets * sub_n, "_bucket", "_sub")
+    append = operation == "append-delta"
+    if not append and not new_files:
+        return MergeStats(skipped=True, snapshot_version=snap.version,
+                          snapshot_id=snap.snapshot_id)
+    if touched is None:
+        touched = {f["bucket"] for f in new_files}
+    stats = MergeStats(touched_buckets=len(touched))
+    if obs is not None:
+        vals = observed_or(obs, plain, counts)
+        stats.rows_upserted, stats.rows_deleted, stats.rows_stale = (
+            int(vals[a] or 0) for a in _ACTS
+        )
+    newsnap = table.commit_rewrite(
+        base=snap,
+        new_files=new_files,
+        replaced_buckets=set() if append else set(touched),
+        epoch_id=epoch_id,
+        summary={
+            "operation": operation,
+            "epoch_id": epoch_id,
+            "touched_buckets": sorted(touched),
+            "rows_upserted": stats.rows_upserted,
+            "rows_deleted": stats.rows_deleted,
+            "rows_stale": stats.rows_stale,
+            **summary,
+        },
+        append_buckets=touched if append else None,
+    )
+    if newsnap is None:  # epoch raced in since our check: no-op
+        return MergeStats(skipped=True)
+    stats.snapshot_version = newsnap.version
+    stats.snapshot_id = newsnap.snapshot_id
+    stats.summary = newsnap.m["summary"]
+    return stats
 
 
 def append_changes(
@@ -323,12 +395,11 @@ def append_changes(
     impossible by construction. compact() folds deltas back to one file
     per bucket.
 
-    ``batch`` is the VALIDATED raw event batch (NOT pre-deduped): the
-    whole pipeline — dedup + bucket layout — runs in ONE shuffle:
-    repartition on _bucket, then groupBy(_bucket, key) max_by, whose
-    clustering requirement the bucket partitioning already satisfies
-    (same bucket => same partition => same (bucket,key) colocated), and
-    partitionBy(_bucket) writes from already-bucket-local tasks.
+    ``batch`` is the VALIDATED raw event batch (NOT pre-deduped): dedup
+    and bucket layout share ONE shuffle — repartition on _bucket, then
+    groupBy(_bucket, key), whose clustering the bucket partitioning
+    already satisfies, and partitionBy(_bucket) writes from
+    bucket-local tasks.
 
     This is the Iceberg merge-on-read (equality-delete) shape — the only
     write mode whose per-batch cost stays flat across a 10^10-event run.
@@ -338,114 +409,37 @@ def append_changes(
         return MergeStats(skipped=True, snapshot_version=snap.version, snapshot_id=snap.snapshot_id)
     key = snap.m["key_col"]
     src = _align_batch(batch, snap, key)
-    ufields = _user_fields(snap)
-    payload = [f for f in ufields if f["name"] != key]
-
-    # sub-bucket split (see _subsplit_factor/_layout_shuffle): the
-    # shuffle/write width becomes n_buckets * S instead of n_buckets.
-    # _sub is derived from the KEY (seeded second hash), so same-key
-    # rows stay colocated and the groupBy below still reuses this one
-    # exchange — grouping by (_bucket, _sub, key) equals grouping by
-    # (_bucket, key) because both extra columns are functions of the key.
-    pre = _layout_shuffle(spark, snap.n_buckets, src, key, src)
     additive = snap.additive_cols
     if additive:
         # aggregating-payload table: batch rows are DELTAS — the
         # in-batch reduction is SUM per key (not LWW), there are no
         # tombstones (a key dies when its summed count reaches <= 0 at
         # read time), and 'op' is ignored by construction
-        winner = pre.groupBy("_bucket", "_sub", key).agg(
-            *[F.sum(F.col(f"`{c}`")).cast("long").alias(c) for c in additive],
-            F.max("ordinal").alias("last_ordinal"),
-        )
-        obs = None
-        if collect_stats:
-            from pyspark.sql import Observation
-
-            obs = Observation()
-            winner = winner.observe(
-                obs,
-                F.lit(0).alias("deleted"),
-                F.count(F.lit(1)).alias("total"),
+        rows = (
+            src.repartition(snap.n_buckets, "_bucket")
+            .groupBy("_bucket", key)
+            .agg(
+                *[F.sum(F.col(f"`{c}`")).cast("long").alias(c) for c in additive],
+                F.max("ordinal").alias("last_ordinal"),
             )
-        rows = winner.select(
-            F.col(key),
-            *[F.col(f"`{c}`") for c in additive],
-            F.col("last_ordinal"),
-            F.lit(False).alias("_deleted"),
-            F.col("_bucket"),
+            .select(
+                F.col(key),
+                *[F.col(f"`{c}`") for c in additive],
+                F.col("last_ordinal"),
+                F.lit(False).alias("_deleted"),
+                F.col("_bucket"),
+                F.lit("up").alias("_act"),
+            )
         )
     else:
-        winner = pre.groupBy("_bucket", "_sub", key).agg(
-            F.max_by(
-                F.struct(F.col("op"), *[F.col(f"`{f['name']}`") for f in payload]),
-                F.col("ordinal"),
-            ).alias("w"),
-            F.max("ordinal").alias("last_ordinal"),
-        )
-        obs = None
-        if collect_stats:
-            from pyspark.sql import Observation
-
-            # stats ride the write job (CollectMetrics) — no extra pass
-            obs = Observation()
-            winner = winner.observe(
-                obs,
-                F.sum(F.when(F.col("w.op") == "D", 1).otherwise(0)).alias("deleted"),
-                F.count(F.lit(1)).alias("total"),
-            )
-        is_delete = F.col("w.op") == "D"
-        rows = winner.select(
-            F.col(key),
-            *[
-                F.when(is_delete, F.lit(None).cast(f["type"]))
-                .otherwise(F.col(f"w.`{f['name']}`"))
-                .alias(f["name"])
-                for f in payload
-            ],
-            F.col("last_ordinal"),
-            is_delete.alias("_deleted"),
-            F.col("_bucket"),
-        )
-    new_files = _stage_write(
-        rows, table, snap.schema_version, snap.n_buckets, max_records_per_file,
-        repartition=False, stats_col=key,
+        deltas = _delta_rows(src, key, _payload(snap))
+        rows = _lww(
+            deltas.repartition(snap.n_buckets, "_bucket"), key, F.col("last_ordinal")
+        ).withColumn("_act", _write_act())
+    return _write_commit(
+        table, snap, rows, epoch_id, collect_stats, max_records_per_file,
+        "append-delta",
     )
-    touched = {f["bucket"] for f in new_files}
-
-    stats = MergeStats(touched_buckets=len(touched))
-    if obs is not None:
-        vals = observed_or(
-            obs,
-            rows,
-            [
-                F.sum(F.when(F.col("_deleted"), 1).otherwise(0)).alias("deleted"),
-                F.count(F.lit(1)).alias("total"),
-            ],
-        )
-        stats.rows_deleted = int(vals["deleted"] or 0)
-        stats.rows_upserted = int(vals["total"] or 0) - stats.rows_deleted
-
-    newsnap = table.commit_rewrite(
-        base=snap,
-        new_files=new_files,
-        replaced_buckets=set(),
-        epoch_id=epoch_id,
-        summary={
-            "operation": "append-delta",
-            "epoch_id": epoch_id,
-            "touched_buckets": sorted(touched),
-            "rows_upserted": stats.rows_upserted,
-            "rows_deleted": stats.rows_deleted,
-        },
-        append_buckets=touched,
-    )
-    if newsnap is None:
-        return MergeStats(skipped=True)
-    stats.snapshot_version = newsnap.version
-    stats.snapshot_id = newsnap.snapshot_id
-    stats.summary = newsnap.m["summary"]
-    return stats
 
 
 # exact numeric base types for zorder validation — startswith('int')
@@ -522,9 +516,7 @@ def compact(
     df = table.read_physical(spark, buckets=target, resolve=True)
     if drop_tombstones:
         df = df.filter(~F.col("_deleted"))
-    df = df.withColumn(
-        "_bucket", F.pmod(F.xxhash64(F.col(key)), F.lit(snap.n_buckets)).cast("int")
-    )
+    df = df.withColumn("_bucket", _bucket_of(key, snap.n_buckets))
     cached = None
     if zorder_cols:
         from qwery_spark.operators.zorder import column_bounds, zorder_col
@@ -601,7 +593,7 @@ def rebucket(
     snap = table.snapshot()
     key = snap.m["key_col"]
     df = table.read_physical(spark, resolve=True).withColumn(
-        "_bucket", F.pmod(F.xxhash64(F.col(key)), F.lit(new_n_buckets)).cast("int")
+        "_bucket", _bucket_of(key, new_n_buckets)
     )
     n_parts = max(min(new_n_buckets, 256), 1)
     df = df.repartition(n_parts, "_bucket")
@@ -632,7 +624,80 @@ def rebucket(
     }
 
 
-def _merge_single_pass(
+def _merge_lww(
+    spark: SparkSession,
+    table: LakeTable,
+    snap: Snapshot,
+    src: DataFrame,
+    touched: set | None,
+    epoch_id,
+    collect_stats: bool,
+    max_records_per_file: int,
+    insert_missing: bool,
+) -> MergeStats:
+    """The union+LWW COW merge, in ONE write job: union the touched
+    buckets' physical rows with the batch shaped as delta rows, keep
+    the max-(ordinal, target-wins-ties) row per key in a single bucket
+    shuffle, and rewrite exactly the touched buckets. Semantically a MOR
+    delta append fused with an immediate compaction of those buckets:
+    max_by over (ordinal, is_target) is the ``s.ordinal > t.last_ordinal``
+    guard, and a delete of an unseen key wins unopposed as a tombstone.
+
+    ``touched=None`` is the empty target (initial view build, first
+    window into a fresh table): the key-unique batch is written as is —
+    no target read, no aggregate.
+
+    ``insert_missing=False`` (UPDATE) keeps only keys with a live target
+    row: a tombstone outranks the batch, and keys the target lacks are
+    dropped."""
+    key = snap.m["key_col"]
+    payload = _payload(snap)
+    s_rows = _delta_rows(src, key, payload)
+    if touched is None:
+        rows = s_rows.repartition(snap.n_buckets, "_bucket").withColumn(
+            "_act", _write_act()
+        )
+        return _write_commit(
+            table, snap, rows, epoch_id, collect_stats, max_records_per_file,
+            "merge", merge_arm="lww",
+        )
+    t_rows = table.read_physical(spark, buckets=touched).select(
+        F.col(key),
+        *[F.col(f"`{f['name']}`") for f in payload],
+        F.col("last_ordinal"),
+        F.col("_deleted"),
+        _bucket_of(key, snap.n_buckets).alias("_bucket"),
+        F.lit(0).alias("_is_src"),
+    )
+    both = t_rows.unionByName(s_rows.withColumn("_is_src", F.lit(1)))
+    is_src = F.col("_is_src")
+    order = [F.col("last_ordinal"), F.lit(1) - is_src]
+    if not insert_missing:
+        order.insert(0, ((is_src == 0) & F.col("_deleted")).cast("int"))
+    rows = _lww(
+        both.repartition(len(touched), "_bucket"),
+        key,
+        F.struct(*order),
+        F.max(is_src).alias("_n_src"),
+        F.min(is_src).alias("_no_tgt"),
+    )
+    won = is_src == 1
+    stale = F.col("_n_src") == 1
+    if not insert_missing:
+        # a tombstone matched nothing; a key the target lacks is dropped
+        stale = stale & ~F.col("_deleted")
+        rows = rows.filter(F.col("_no_tgt") == 0)
+    rows = rows.withColumn(
+        "_act",
+        F.when(won & F.col("_deleted"), "del").when(won, "up").when(stale, "stale"),
+    ).drop("_is_src", "_n_src", "_no_tgt")
+    return _write_commit(
+        table, snap, rows, epoch_id, collect_stats, max_records_per_file,
+        "merge", touched, merge_arm="lww",
+    )
+
+
+def _merge_broadcast(
     spark: SparkSession,
     table: LakeTable,
     snap: Snapshot,
@@ -642,134 +707,69 @@ def _merge_single_pass(
     collect_stats: bool,
     max_records_per_file: int,
 ) -> MergeStats:
-    """Small-touched-set COW merge in ONE write job: union the touched
-    buckets' physical rows with the (cached) batch shaped as delta
-    rows, LWW-resolve per key in a single sub-bucket-split shuffle, and
-    rewrite exactly the touched buckets. Semantically a MOR delta
-    append fused with an immediate compaction of those buckets — max_by
-    over (ordinal, is_target) reproduces the general path's
-    `s.ordinal > t.last_ordinal` guard exactly (ties keep the target
-    row; deletes of unseen keys become tombstones via the src row
-    winning unopposed).
-
-    Why: the broadcast merge scans the target once but also PERSISTS
-    the full joined target, runs a matched-keys derivation and an
-    anti-join for inserts — two extra jobs and a bucket-set-sized cache
-    per epoch. When the manifest proves the touched buckets small, one
-    shuffle of target+batch is cheaper than any of that (measured
-    round 7: the 4-epoch COW replay queries ~2x). A 100-TB touched set
-    fails the gate and keeps the no-target-shuffle broadcast join."""
+    """The big-target COW merge: the touched target side NEVER shuffles
+    and is scanned exactly ONCE. One broadcast left join of the target
+    against the cached batch applies the guard to matched rows and tags
+    them with the matched batch key (``_mk``); it is persisted and
+    eagerly materialized, so both the write and the matched-keys
+    derivation read cached blocks, never the parquet again
+    (plan-asserted in tests/test_plans.py). Batch keys absent from the
+    target become inserts through a broadcast anti join; their bucket
+    repartition is the only shuffle. persist, NOT localCheckpoint: on
+    executor loss cached partitions recompute from the parquet lineage
+    (a checkpoint would truncate it and fail the merge permanently)."""
     key = snap.m["key_col"]
-    ufields = _user_fields(snap)
-    payload = [f for f in ufields if f["name"] != key]
-    is_delete = F.col("op") == "D"
-    s_rows = src.select(
-        F.col(key),
+    payload = _payload(snap)
+    tgt = table.read_physical(spark, buckets=touched).withColumn(
+        "_bucket", _bucket_of(key, snap.n_buckets)
+    ).alias("t")
+    s = src.alias("s")
+    # null on unmatched target rows — when() then keeps the target row
+    apply_change = F.col("s.ordinal") > F.col("t.last_ordinal")
+    is_delete = F.col("s.op") == "D"
+    merged = tgt.join(
+        F.broadcast(s), F.col(f"t.`{key}`") == F.col(f"s.`{key}`"), "left"
+    ).select(
+        F.col(f"t.`{key}`").alias(key),
         *[
-            F.when(is_delete, F.lit(None).cast(f["type"]))
-            .otherwise(F.col(f"`{f['name']}`"))
+            F.when(apply_change & is_delete, F.lit(None).cast(f["type"]))
+            .when(apply_change, F.col(f"s.`{f['name']}`"))
+            .otherwise(F.col(f"t.`{f['name']}`"))
             .alias(f["name"])
             for f in payload
         ],
-        F.col("ordinal").cast("bigint").alias("last_ordinal"),
-        is_delete.alias("_deleted"),
-        F.col("_bucket"),
-        F.lit(1).alias("_is_src"),
-    )
-    tgt = table.read_physical(spark, buckets=touched, resolve=True).withColumn(
-        "_bucket", F.pmod(F.xxhash64(F.col(key)), F.lit(snap.n_buckets)).cast("int")
-    )
-    t_rows = tgt.select(
-        F.col(key),
-        *[F.col(f"`{f['name']}`") for f in payload],
-        F.col("last_ordinal"),
-        F.col("_deleted"),
-        F.col("_bucket"),
-        F.lit(0).alias("_is_src"),
-    )
-    allr0 = t_rows.unionByName(s_rows)
-    pre = _layout_shuffle(spark, len(touched), allr0, key, allr0)
-    # winner per key by (ordinal, target-wins-ties); carries its own
-    # ordinal/_deleted; n_src tells stale/insert apart for the stats
-    w = F.max_by(
-        F.struct(
-            *[F.col(f"`{f['name']}`") for f in payload],
-            F.col("last_ordinal"),
-            F.col("_deleted"),
-            F.col("_is_src"),
-        ),
-        F.struct(F.col("last_ordinal"), (F.lit(1) - F.col("_is_src"))),
-    ).alias("w")
-    agg = pre.groupBy("_bucket", "_sub", key).agg(
-        w, F.max("_is_src").alias("_n_src")
-    )
-    act = (
-        F.when((F.col("w._is_src") == 1) & F.col("w._deleted"), "del")
-        .when(F.col("w._is_src") == 1, "up")
-        .when(F.col("_n_src") == 1, "stale")
-    )
-    result = agg.select(
-        F.col(key),
-        *[F.col(f"w.`{f['name']}`").alias(f["name"]) for f in payload],
-        F.col("w.last_ordinal").alias("last_ordinal"),
-        F.col("w._deleted").alias("_deleted"),
-        F.col("_bucket"),
-        act.alias("_act"),
-        F.col("w._is_src").alias("_src_row"),
-    )
-    obs = None
-    if collect_stats:
-        from pyspark.sql import Observation
-
-        # MERGE action counts ride the one write job — no second pass
-        obs = Observation()
-        result = result.observe(
-            obs,
-            F.sum(F.when(F.col("_act") == "up", 1).otherwise(0)).alias("up"),
-            F.sum(F.when(F.col("_act") == "del", 1).otherwise(0)).alias("del"),
-            F.sum(F.when(F.col("_act") == "stale", 1).otherwise(0)).alias(
-                "stale"
-            ),
+        F.when(apply_change, F.col("s.ordinal"))
+        .otherwise(F.col("t.last_ordinal"))
+        .alias("last_ordinal"),
+        F.when(apply_change, is_delete).otherwise(F.col("t._deleted")).alias("_deleted"),
+        F.col("t._bucket").alias("_bucket"),
+        F.when(apply_change & is_delete, "del")
+        .when(apply_change, "up")
+        .when(F.col("s.ordinal").isNotNull(), "stale")
+        .alias("_act"),
+        F.col(f"s.`{key}`").alias("_mk"),
+    ).persist()
+    try:
+        merged.count()  # the ONE scan of the touched target buckets
+        matched_keys = merged.filter(F.col("_mk").isNotNull()).select(
+            F.col("_mk").alias(key)
         )
-    result = result.drop("_act", "_src_row")
-    new_files = _stage_write(
-        result, table, snap.schema_version, len(touched),
-        max_records_per_file, repartition=False, stats_col=key,
-    )
-    stats = MergeStats(touched_buckets=len(touched))
-    if obs is not None:
-        vals = observed_or(
-            obs,
-            result,
-            [
-                F.lit(0).alias("up"),
-                F.lit(0).alias("del"),
-                F.lit(0).alias("stale"),
-            ],
+        inserts = (
+            _delta_rows(
+                src.join(F.broadcast(matched_keys), key, "left_anti"), key, payload
+            )
+            .withColumn("_act", _write_act())
+            .repartition(max(min(len(touched), 64), 1), "_bucket")
         )
-        stats.rows_upserted = int(vals["up"] or 0)
-        stats.rows_deleted = int(vals["del"] or 0)
-        stats.rows_stale = int(vals["stale"] or 0)
-    newsnap = table.commit_rewrite(
-        base=snap,
-        new_files=new_files,
-        replaced_buckets=set(touched),
-        epoch_id=epoch_id,
-        summary={
-            "operation": "merge",
-            "epoch_id": epoch_id,
-            "touched_buckets": sorted(touched),
-            "rows_upserted": stats.rows_upserted,
-            "rows_deleted": stats.rows_deleted,
-            "rows_stale": stats.rows_stale,
-        },
-    )
-    if newsnap is None:
-        return MergeStats(skipped=True)
-    stats.snapshot_version = newsnap.version
-    stats.snapshot_id = newsnap.snapshot_id
-    stats.summary = newsnap.m["summary"]
-    return stats
+        # matched rows are target-scan-local and inserts bucket-
+        # partitioned: written as is (partitionBy routes the bucket dirs)
+        return _write_commit(
+            table, snap, merged.drop("_mk").unionByName(inserts), epoch_id,
+            collect_stats, max_records_per_file, "merge", touched,
+            merge_arm="broadcast",
+        )
+    finally:
+        merged.unpersist()
 
 
 def merge_changes(
@@ -780,20 +780,23 @@ def merge_changes(
     collect_stats: bool = True,
     max_records_per_file: int = 2_000_000,
     insert_missing: bool = True,
-    broadcast_threshold: int = 4_000_000,
-    broadcast_max_bytes: int = 256 << 20,
-    small_table_rows: int = 8_000_000,
 ) -> MergeStats:
-    """Apply a key-unique change batch to the table.
+    """Apply a key-unique change batch to the table (copy-on-write).
 
     ``batch`` contract: exactly one row per key (pre-deduped LWW winner)
     with columns (doc_id, op in {'U','D'}, ordinal bigint, <user payload
     columns>). Missing user columns (e.g. just added via DDL) null-fill.
 
-    insert_missing=False gives UPDATE ... KEYED ON semantics (matched
-    rows only, unmatched batch rows are no-ops — reference:
-    core:ops/sql/Update.scala:19-44); the join flips from full_outer to
-    a target-side left join.
+    insert_missing=False gives UPDATE ... KEYED ON semantics: only keys
+    with a live target row change; other batch rows are no-ops
+    (reference: core:ops/sql/Update.scala:19-44).
+
+    Arms (recorded as ``merge_arm`` in the commit summary): ``lww``,
+    unless the manifest row counts of the touched buckets exceed
+    LWW_MAX_TARGET_ROWS (or are unknown) and the cached batch fits
+    BROADCAST_MAX_ROWS and BROADCAST_MAX_BYTES — then ``broadcast``.
+    UPDATE always takes ``lww``. An empty target skips the batch cache
+    and the touched-bucket count: its merge is one write job.
     """
     snap = table.snapshot()
     if epoch_id is not None and epoch_id in snap.applied_epochs:
@@ -803,319 +806,43 @@ def merge_changes(
             "merge_changes on an aggregating-payload (additive) table — "
             "its rows are deltas; use append_changes"
         )
-
     key = snap.m["key_col"]
-    ufields = _user_fields(snap)
-    payload_cols = [f["name"] for f in ufields if f["name"] != key]
     src = _align_batch(batch, snap, key)
-
-    if insert_missing and not snap.m["files"]:
-        # ---- EMPTY-TARGET fast path (initial view build / first
-        # window into a fresh table): nothing can match, so every
-        # batch row is an insert (a delete of an unseen key becomes a
-        # tombstone — identical to the general path's NOT MATCHED arm).
-        # ONE pass: shape -> observe -> write -> commit. The general
-        # path would persist the whole batch, run a bucket-count job,
-        # and join against an empty scan — for the span-index build
-        # (~10M delta rows at sf1.0) that is two extra materializations
-        # of the most expensive subplan in the query (measured round 7,
-        # guide §1.2: don't compute things you throw away).
-        ins_delete = F.col("op") == "D"
-        shaped = src.select(
-            F.col(key),
-            *[
-                F.when(ins_delete, F.lit(None).cast(f["type"]))
-                .otherwise(F.col(f"`{f['name']}`"))
-                .alias(f["name"])
-                for f in ufields
-                if f["name"] != key
-            ],
-            F.col("ordinal").alias("last_ordinal"),
-            ins_delete.alias("_deleted"),
-            F.col("_bucket"),
-        )
-        rows = _layout_shuffle(
-            spark, snap.n_buckets, shaped, key, shaped
-        ).drop("_sub")
-        obs = None
-        if collect_stats:
-            from pyspark.sql import Observation
-
-            obs = Observation()
-            rows = rows.observe(
-                obs,
-                F.sum(F.when(F.col("_deleted"), 1).otherwise(0)).alias("del"),
-                F.count(F.lit(1)).alias("total"),
-            )
-        new_files = _stage_write(
-            rows, table, snap.schema_version, snap.n_buckets,
-            max_records_per_file, repartition=False, stats_col=key,
-        )
-        if not new_files:
+    args = (epoch_id, collect_stats, max_records_per_file)
+    if not snap.m["files"]:
+        if not insert_missing:  # an UPDATE of an empty table matches nothing
             return MergeStats(skipped=True, snapshot_version=snap.version,
                               snapshot_id=snap.snapshot_id)
-        touched = {f["bucket"] for f in new_files}
-        stats = MergeStats(touched_buckets=len(touched))
-        if obs is not None:
-            vals = observed_or(
-                obs,
-                rows,
-                [
-                    F.sum(F.when(F.col("_deleted"), 1).otherwise(0)).alias("del"),
-                    F.count(F.lit(1)).alias("total"),
-                ],
-            )
-            stats.rows_deleted = int(vals["del"] or 0)
-            stats.rows_upserted = int(vals["total"] or 0) - stats.rows_deleted
-        newsnap = table.commit_rewrite(
-            base=snap,
-            new_files=new_files,
-            replaced_buckets=touched,
-            epoch_id=epoch_id,
-            summary={
-                "operation": "merge",
-                "epoch_id": epoch_id,
-                "touched_buckets": sorted(touched),
-                "rows_upserted": stats.rows_upserted,
-                "rows_deleted": stats.rows_deleted,
-                "rows_stale": 0,
-            },
-        )
-        if newsnap is None:  # epoch raced in since our check: no-op
-            return MergeStats(skipped=True)
-        stats.snapshot_version = newsnap.version
-        stats.snapshot_id = newsnap.snapshot_id
-        stats.summary = newsnap.m["summary"]
-        return stats
+        return _merge_lww(spark, table, snap, src, None, *args, insert_missing)
 
     src.persist()
-    merged_cache = None
     try:
         # one driver job yields both the touched-bucket set (bounded by
-        # n_buckets, safe to collect) and the row count the broadcast
-        # decision needs
+        # n_buckets, safe to collect) and the batch row count
         bucket_counts = src.groupBy("_bucket").count().collect()
         touched = {r[0] for r in bucket_counts}
         n_src = sum(r[1] for r in bucket_counts)
         if not touched:
             return MergeStats(skipped=True, snapshot_version=snap.version,
                               snapshot_id=snap.snapshot_id)
-
-        # ---- SMALL-TOUCHED-SET single-pass arm: gate on the manifest
-        # row counts of the buckets this batch touches (metadata only).
-        # When they are provably small, merge in ONE union+LWW shuffle
-        # over (touched physical rows ∪ cached batch) — no table-sized
-        # persist, no matched-keys derivation, no anti-join — and
-        # rewrite exactly the touched buckets (write amplification
-        # unchanged). Big touched sets keep the broadcast arm below,
-        # whose target side never shuffles at all.
-        # QWERY_MERGE_SINGLE_PASS=0 is the A/B instrument.
         touched_rows = [f.get("rows") for f in snap.files(touched)]
-        if (
-            insert_missing
-            and os.environ.get("QWERY_MERGE_SINGLE_PASS", "1") == "1"
-            and all(r is not None for r in touched_rows)
-            and sum(touched_rows) <= small_table_rows
-        ):
-            return _merge_single_pass(
-                spark, table, snap, src, touched, epoch_id, collect_stats,
-                max_records_per_file,
-            )
-
-        tgt = table.read_physical(spark, buckets=touched)
-
-        s = src.alias("s")
-
-        apply_change = F.col("s.ordinal").isNotNull() & (
-            F.col("t.last_ordinal").isNull()
-            | (F.col("s.ordinal") > F.col("t.last_ordinal"))
-        )
-        is_delete = F.col("s.op") == F.lit("D")
-
-        out_cols = [F.coalesce(F.col(f"s.`{key}`"), F.col(f"t.`{key}`")).alias(key)]
-        for c in payload_cols:
-            out_cols.append(
-                F.when(apply_change & is_delete, F.lit(None).cast(dict((f["name"], f["type"]) for f in ufields)[c]))
-                .when(apply_change, F.col(f"s.`{c}`"))
-                .otherwise(F.col(f"t.`{c}`"))
-                .alias(c)
-            )
-        out_cols.append(
-            F.when(apply_change, F.col("s.ordinal"))
-            .otherwise(F.col("t.last_ordinal"))
-            .alias("last_ordinal")
-        )
-        out_cols.append(
-            F.when(apply_change, is_delete)
-            .otherwise(F.coalesce(F.col("t.`_deleted`"), F.lit(False)))
-            .alias("_deleted")
-        )
-        out_cols.append(F.coalesce(F.col("s.`_bucket`"), F.col("t.`_bucket`")).alias("_bucket"))
-
-        # target bucket derived on the fly (cheap; no shuffle added)
-        tgt_b = tgt.withColumn(
-            "_bucket", F.pmod(F.xxhash64(F.col(key)), F.lit(snap.n_buckets)).cast("int")
-        ).alias("t")
-        act = (
-            F.when(apply_change & is_delete, "del")
-            .when(apply_change, "up")
-            .when(F.col("s.ordinal").isNotNull(), "stale")
-        )
-        join_cond = F.col(f"t.`{key}`") == F.col(f"s.`{key}`")
-
-        # gate the broadcast on MEASURED bytes, not rows: wide token-array
-        # payloads can push a few million rows to multi-GB, far past safe
-        # driver-collect + per-executor-copy territory. The persisted
-        # InMemoryRelation stats are the actual cached size; if the stats
-        # call ever fails, fall back to the conservative row cap alone.
-        try:
-            src_bytes = int(
-                src._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-            )
-        except Exception:
-            src_bytes = None
-        use_broadcast = (
-            insert_missing
-            and n_src <= broadcast_threshold
-            and (src_bytes is None or src_bytes <= broadcast_max_bytes)
-        )
-        # A/B instrument (round-3 verdict: the driver-recorded COW
-        # throughput dropped 1.8x vs round 2 in the same round the merge
-        # went single-scan — reconcile by measurement, not narrative).
-        # QWERY_MERGE_TWO_SCAN=1 restores the round-2 broadcast shape:
-        # no persist of the merged join; matched keys come from a SECOND
-        # left_semi scan of the touched target buckets.
-        two_scan = os.environ.get("QWERY_MERGE_TWO_SCAN") == "1"
-
-        def _inserts(matched_keys):
-            # src keys absent from the target become inserts (deletes of
-            # absent keys become tombstones). matched_keys is <= |src|
-            # rows, so the anti join broadcasts; the repartition is the
-            # only shuffle left — the small inserts' bucket layout for
-            # the partitioned write. Shared by BOTH broadcast arms so
-            # the A/B stays a pure performance switch.
-            ins_delete = F.col("op") == "D"
-            return (
-                src.join(F.broadcast(matched_keys), key, "left_anti")
-                .select(
-                    F.col(key),
-                    *[
-                        F.when(ins_delete, F.lit(None).cast(f["type"]))
-                        .otherwise(F.col(f"`{f['name']}`"))
-                        .alias(f["name"])
-                        for f in ufields
-                        if f["name"] != key
-                    ],
-                    F.col("ordinal").alias("last_ordinal"),
-                    ins_delete.alias("_deleted"),
-                    F.col("_bucket"),
-                    F.when(ins_delete, "del").otherwise("up").alias("_act"),
+        big_target = None in touched_rows or sum(touched_rows) > LWW_MAX_TARGET_ROWS
+        if insert_missing and big_target and n_src <= BROADCAST_MAX_ROWS:
+            # gate on MEASURED bytes too: wide token-array payloads can
+            # push a few million rows to multi-GB. The persisted
+            # InMemoryRelation stats are the actual cached size; if the
+            # stats call fails, the row cap alone decides.
+            try:
+                src_bytes = int(
+                    src._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
                 )
-                .repartition(max(min(len(touched), 64), 1), "_bucket")
-            )
-
-        if use_broadcast and two_scan:
-            merged = tgt_b.join(F.broadcast(s), join_cond, "left").select(
-                *out_cols, act.alias("_act")
-            )
-            matched_keys = (
-                table.read_physical(spark, buckets=touched)
-                .select(F.col(f"`{key}`"))
-                .join(F.broadcast(src.select(key)), key, "left_semi")
-            )
-            result = merged.unionByName(_inserts(matched_keys))
-        elif use_broadcast:
-            # ---- BROADCAST MERGE: the target side NEVER shuffles, and
-            # is scanned exactly ONCE (round-2 verdict: the old shape
-            # re-read the touched buckets for a left_semi matched-keys
-            # pass — at 100 TB the touched-bucket scan dominates a COW
-            # batch, so paying it twice halves merge throughput). The
-            # one broadcast left join carries the matched src key as a
-            # tag column and is persisted + eagerly materialized (count);
-            # both the matched-keys derivation and the final write read
-            # the cached blocks, never the parquet again (plan-asserted
-            # in tests/test_plans.py). persist, NOT localCheckpoint: on
-            # executor loss cached partitions recompute from the parquet
-            # lineage (a checkpoint would truncate it and fail the merge
-            # permanently); unpersisted in the finally below.
-            merged = tgt_b.join(F.broadcast(s), join_cond, "left").select(
-                *out_cols, act.alias("_act"), F.col(f"s.`{key}`").alias("_mk")
-            )
-            merged_cache = merged = merged.persist()
-            merged.count()  # the ONE scan of the touched target buckets
-            matched = merged.drop("_mk")
-            matched_keys = (
-                merged.filter(F.col("_mk").isNotNull())
-                .select(F.col("_mk").alias(key))
-            )
-            result = matched.unionByName(_inserts(matched_keys))
-        else:
-            join_how = "full_outer" if insert_missing else "left"
-            joined = tgt_b.join(s, join_cond, join_how)
-            result = joined.select(*out_cols, act.alias("_act"))
-
-        obs = None
-        if collect_stats:
-            from pyspark.sql import Observation
-
-            # MERGE action counts ride the write job — no second pass
-            obs = Observation()
-            result = result.observe(
-                obs,
-                F.sum(F.when(F.col("_act") == "up", 1).otherwise(0)).alias("up"),
-                F.sum(F.when(F.col("_act") == "del", 1).otherwise(0)).alias("del"),
-                F.sum(F.when(F.col("_act") == "stale", 1).otherwise(0)).alias("stale"),
-            )
-        result = result.drop("_act")
-
-        # ---- write new files for touched buckets ----
-        # broadcast path: matched rows are already target-scan-local and
-        # inserts are bucket-repartitioned — re-shuffling would undo the
-        # zero-shuffle plan, so write as-is (partitionBy still routes
-        # rows to the right bucket dirs).
-        new_files = _stage_write(
-            result, table, snap.schema_version, len(touched), max_records_per_file,
-            repartition=not use_broadcast, stats_col=key,
-        )
-        stats = MergeStats(touched_buckets=len(touched))
-        if obs is not None:
-            vals = observed_or(
-                obs,
-                result,
-                [
-                    F.lit(0).alias("up"),
-                    F.lit(0).alias("del"),
-                    F.lit(0).alias("stale"),
-                ],
-            )
-            stats.rows_upserted = int(vals["up"] or 0)
-            stats.rows_deleted = int(vals["del"] or 0)
-            stats.rows_stale = int(vals["stale"] or 0)
-
-        newsnap = table.commit_rewrite(
-            base=snap,
-            new_files=new_files,
-            replaced_buckets=touched,
-            epoch_id=epoch_id,
-            summary={
-                "operation": "merge",
-                "epoch_id": epoch_id,
-                "touched_buckets": sorted(touched),
-                "rows_upserted": stats.rows_upserted,
-                "rows_deleted": stats.rows_deleted,
-                "rows_stale": stats.rows_stale,
-            },
-        )
-        if newsnap is None:  # epoch raced in since our check: no-op
-            return MergeStats(skipped=True)
-        stats.snapshot_version = newsnap.version
-        stats.snapshot_id = newsnap.snapshot_id
-        stats.summary = newsnap.m["summary"]
-        return stats
+            except Exception:
+                src_bytes = 0
+            if src_bytes <= BROADCAST_MAX_BYTES:
+                return _merge_broadcast(spark, table, snap, src, touched, *args)
+        return _merge_lww(spark, table, snap, src, touched, *args, insert_missing)
     finally:
         src.unpersist()
-        if merged_cache is not None:
-            merged_cache.unpersist()
 
 
 def binpack(

@@ -370,8 +370,8 @@ def test_policy_expire_older_than(spark, tmp_table_dir):
     t = _mk(tmp_table_dir)
     # MOR delta appends so buckets genuinely accumulate >1 file and the
     # max_files_per_bucket=1 policy is due (a COW merge rewrites each
-    # touched bucket to ONE file since the sub-bucket split revert, so
-    # it can never make this policy fire)
+    # touched bucket to ONE file from one write task, so it can never
+    # make this policy fire)
     for e in range(6):
         append_changes(spark, t, _batch(spark, [(f"k{e}", "U", e + 1, e)]), epoch_id=e)
     pol = CompactionPolicy(

@@ -161,39 +161,39 @@ def test_validation_arrow_matches_builtin(spark, tmp_table_dir):
     assert pa_["reject_reason"].notna().sum() > 0
 
 
-def test_shuffle_merge_path_matches_oracle(spark, tmp_table_dir):
-    """Force the full-outer shuffle MERGE (broadcast_threshold=0) — the
-    big-batch path must stay semantically identical."""
-    from pyspark.sql import functions as F
+@pytest.mark.parametrize(
+    "arm, gates",
+    [
+        ("lww", {}),
+        ("broadcast", {"LWW_MAX_TARGET_ROWS": 0}),
+        # the bytes cap (the OOM guard for wide payloads) keeps a big
+        # target on lww even for a tiny batch
+        ("lww", {"LWW_MAX_TARGET_ROWS": 0, "BROADCAST_MAX_BYTES": 0}),
+    ],
+    ids=["lww", "broadcast", "bytes_gate"],
+)
+def test_merge_arm_matches_oracle(spark, tmp_table_dir, monkeypatch, arm, gates):
+    """Each COW merge arm matches the replay oracle over three epochs
+    carrying deletes and low-ordinal stragglers (a held-back tenth of
+    epoch 0 arrives with epoch 2). The arm is forced through the gate
+    constants; the first epoch, into an empty table, always takes lww."""
+    import qwery_spark.lake.merge as M
 
-    from qwery_spark.cdc.dedup import lww_dedup
-    from qwery_spark.cdc.validate import split_valid
-    from qwery_spark.lake.merge import merge_changes
-
+    for name, value in gates.items():
+        monkeypatch.setattr(M, name, value)
     tbl = _mk_table(tmp_table_dir)
-    events = make_events(4000, seed=113)
-    for i, (lo, hi) in enumerate([(0, 2000), (2000, 4000)]):
-        df = _events_df(spark, events.slice(lo, hi - lo))
-        valid, _ = split_valid(df.filter(F.col("op") != "DDL").drop("ddl"))
-        merge_changes(spark, tbl, lww_dedup(valid), epoch_id=i, broadcast_threshold=0)
-    assert_state_equals_oracle(spark, tbl, events.to_pandas())
-
-
-def test_bytes_gate_forces_shuffle_merge(spark, tmp_table_dir):
-    """broadcast_max_bytes=0 must route even a tiny batch through the
-    full-outer shuffle MERGE (the OOM guard for wide token payloads) —
-    and the result must stay semantically identical."""
-    from pyspark.sql import functions as F
-
-    from qwery_spark.cdc.dedup import lww_dedup
-    from qwery_spark.cdc.validate import split_valid
-    from qwery_spark.lake.merge import merge_changes
-
-    tbl = _mk_table(tmp_table_dir)
-    events = make_events(2000, seed=127)
-    for i, (lo, hi) in enumerate([(0, 1000), (1000, 2000)]):
-        df = _events_df(spark, events.slice(lo, hi - lo))
-        valid, _ = split_valid(df.filter(F.col("op") != "DDL").drop("ddl"))
-        merge_changes(spark, tbl, lww_dedup(valid), epoch_id=i,
-                      broadcast_max_bytes=0)
-    assert_state_equals_oracle(spark, tbl, events.to_pandas())
+    events = make_events(4000, seed=113).to_pandas()
+    late = events.iloc[:1500].sample(frac=0.1, random_state=5)
+    epochs = [
+        events.iloc[:1500].drop(late.index),
+        events.iloc[1500:3000],
+        pd.concat([events.iloc[3000:], late]),
+    ]
+    assert (late["op"] == "D").any()
+    for i, ev in enumerate(epochs):
+        res = apply_changes(
+            spark, tbl, spark.createDataFrame(ev, schema=EVENT_SCHEMA), epoch_id=i
+        )
+        assert res.merge.summary["merge_arm"] == ("lww" if i == 0 else arm)
+    assert res.merge.rows_stale > 0  # the stragglers reached the guard
+    assert_state_equals_oracle(spark, tbl, events)

@@ -552,6 +552,31 @@ def test_script_lifecycle_non_doc_id_key(eng, tmp_path):
             eng.execute(f"UPDATE LAKE '{path}' SET v = 0 KEYED ON other")
 
 
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+def test_update_lake_select_skips_deleted_and_missing_keys(eng, tmp_path, mode):
+    """UPDATE LAKE ... KEYED ON <select> changes live rows only: a key
+    deleted earlier stays deleted (its tombstone is not a match), and a
+    key the table never held is not inserted."""
+    from qwery_spark.lake.table import LakeTable
+
+    path = str(tmp_path / f"lake_{mode}")
+    eng.execute(
+        f"CREATE LAKE '{path}' (id string, v int) KEYED ON id BUCKETS 4 MODE {mode}"
+    )
+    eng.execute(
+        f"UPSERT INTO LAKE '{path}' KEYED ON id "
+        "SELECT * FROM VALUES ('a', 1, 1L), ('b', 2, 2L) AS t(id, v, ordinal)"
+    )
+    eng.execute(f"DELETE FROM LAKE '{path}' KEYED ON id ORDINAL 5 WHERE id = 'b'")
+    res = eng.execute(
+        f"UPDATE LAKE '{path}' KEYED ON id "
+        "SELECT * FROM VALUES ('b', 99, 9L), ('zz', 7, 9L) AS t(id, v, ordinal)"
+    ).collect()[0]
+    got = {r["id"]: r["v"] for r in LakeTable(path).read(eng.spark).collect()}
+    assert got == {"a": 1}
+    assert res["ROWS_UPSERTED"] == 0
+
+
 def test_vacuum_grace_syntax(eng, tmp_path):
     """VACUUM LAKE 'p' GRACE 0 reclaims immediately; bare VACUUM keeps
     the 1h grace that protects concurrent writers' staged files."""

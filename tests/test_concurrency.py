@@ -142,24 +142,10 @@ def test_append_rebases_over_append(spark, tmp_table_dir):
         .filter(F.col("op") != "DDL")
         .drop("ddl")
     )
-    from qwery_spark.lake.merge import _align_batch, _user_fields
+    from qwery_spark.lake.merge import _align_batch, _delta_rows, _payload
 
     ded = lww_dedup(valid)
-    aligned = _align_batch(ded, base, "doc_id")
-    is_delete = F.col("op") == "D"
-    payload = [f for f in _user_fields(base) if f["name"] != "doc_id"]
-    rows = aligned.select(
-        F.col("doc_id"),
-        *[
-            F.when(is_delete, F.lit(None).cast(f["type"]))
-            .otherwise(F.col(f"`{f['name']}`"))
-            .alias(f["name"])
-            for f in payload
-        ],
-        F.col("ordinal").alias("last_ordinal"),
-        is_delete.alias("_deleted"),
-        F.col("_bucket"),
-    )
+    rows = _delta_rows(_align_batch(ded, base, "doc_id"), "doc_id", _payload(base))
     files = _stage_write(rows, tbl, base.schema_version, 4, 2_000_000)
     touched = {f["bucket"] for f in files}
 
