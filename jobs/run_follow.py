@@ -24,6 +24,11 @@ persisted los partition the version axis. The resume point is pinned to
 where the previous one stopped, even if the first run shipped nothing.
 ``--max-polls`` bounds the run (drain-style); omit it for a daemon.
 
+The incremental views (``--agg-table`` … ``--join-table``) are declared
+in one registry, a list of ``streaming.stream.Maintainer`` entries, one
+per view flag: ``build_missing`` builds them at the resume point, and
+``maintain_window`` advances them off one shared feed per window.
+
 No local-mode assumptions: uses the ambient SparkSession from
 spark-submit.
 """
@@ -148,12 +153,6 @@ def main(argv=None):
                         "re-clustered by cell on trigger so probe file "
                         "pruning stays tight")
     args = p.parse_args(argv)
-    if not (args.sink or args.replica or args.agg_table or args.scd2_table
-            or args.sigindex_table or args.annindex_table
-            or args.join_table or args.vocab_table or args.spanindex_table):
-        p.error("need --sink, --replica, --agg-table, --scd2-table, "
-                "--sigindex-table, --annindex-table, --join-table, "
-                "--vocab-table and/or --spanindex-table")
     if args.agg_table and not args.agg_group:
         p.error("--agg-table requires --agg-group")
     if args.join_table and not (args.join_dim and args.join_fk
@@ -166,19 +165,128 @@ def main(argv=None):
     if args.annindex_table and not args.annindex_centroids:
         p.error("--annindex-table requires --annindex-centroids")
 
-    from pyspark.sql import SparkSession
-
     from qwery_spark.lake.changes import replicate
+    from qwery_spark.lake.maintenance import CompactionPolicy, maybe_compact
     from qwery_spark.lake.table import LakeTable
-    from qwery_spark.streaming.stream import follow_changes
+    from qwery_spark.operators import (
+        annindex, joinview, materialize, sigindex, spanindex, vocab)
+    from qwery_spark.streaming.stream import (
+        Maintainer, build_missing, follow_changes, maintain_window)
 
-    spark = SparkSession.builder.appName("qwery-follow").getOrCreate()
     table = LakeTable(args.table)
-
-    start = args.from_version
     # dim-side resume point for --join-table, persisted alongside the
     # fact version (the two feeds advance in lockstep per window)
     dim_state = {"v": None}
+
+    def persist(version: int) -> None:
+        tmp = args.state + ".tmp"
+        st = {"version": version, "table": table.path}
+        if dim_state["v"] is not None:
+            st["dim_version"] = dim_state["v"]
+        with open(tmp, "w") as fh:
+            json.dump(st, fh)
+        os.replace(tmp, args.state)
+
+    def cols(csv: str) -> list:
+        return [c for c in csv.split(",") if c]
+
+    # the build_*/update_* shape every view but the join one shares;
+    # `spark` binds below, before any build or update runs
+    def maintainer(name, path, build, update, policy=None, **kw):
+        view = LakeTable(path)
+        return Maintainer(
+            name, view.path,
+            lambda v: build(spark, table, view.path, at_version=v, **kw),
+            lambda lo, hi, feed: update(spark, table, view, from_version=lo,
+                                        to_version=hi, feed=feed, **kw),
+            policy)
+
+    def mor_policy(**kw):
+        # MOR views accumulate per-window delta files like the replica
+        # does (agg, vocab and join are COW and self-compacting)
+        if args.auto_compact_views:
+            return CompactionPolicy(
+                max_files_per_bucket=args.auto_compact_views, **kw)
+        return None
+
+    # the view registry, one entry per view flag, in window-update order
+    views = []
+    if args.agg_table:
+        views.append(maintainer(
+            "agg", args.agg_table, materialize.build_agg,
+            materialize.update_agg,
+            group_col=args.agg_group, sum_cols=cols(args.agg_sum),
+            min_cols=cols(args.agg_min), max_cols=cols(args.agg_max)))
+    if args.scd2_table:
+        views.append(maintainer(
+            "scd2", args.scd2_table, materialize.build_scd2,
+            materialize.update_scd2, mor_policy()))
+    if args.sigindex_table:
+        views.append(maintainer(
+            "sigindex", args.sigindex_table, sigindex.build_signature_index,
+            sigindex.update_signature_index, mor_policy(),
+            text_col=args.sigindex_text))
+    if args.annindex_table:
+        with open(args.annindex_centroids) as fh:
+            centroids = json.load(fh)
+        # re-clustered by cell on trigger so probe file pruning stays tight
+        views.append(maintainer(
+            "annindex", args.annindex_table, annindex.build_ann_index,
+            annindex.update_ann_index, mor_policy(sort_cols=["cell"]),
+            centroids=centroids, emb_col=args.annindex_emb))
+    if args.vocab_table:
+        views.append(maintainer(
+            "vocab", args.vocab_table, vocab.build_vocab, vocab.update_vocab,
+            tokens_col=args.vocab_tokens))
+    if args.spanindex_table:
+        views.append(maintainer(
+            "spanindex", args.spanindex_table, spanindex.build_span_index,
+            spanindex.update_span_index, mor_policy(),
+            tokens_col=args.vocab_tokens, length=args.spanindex_length))
+    join = None
+    if args.join_table:
+        join_view = LakeTable(args.join_table)
+        dim_tbl = LakeTable(args.join_dim)
+        join_kw = {"fk_col": args.join_fk, "how": args.join_how,
+                   "left_cols": cols(args.join_left_cols),
+                   "right_cols": cols(args.join_right_cols)}
+
+        def build_join_view(v):
+            # a fresh build pins BOTH resume points (fact at v, dim at its
+            # head), re-pinned so a drain that ships no window keeps them
+            dim_state["v"] = dim_tbl.current_version()
+            joinview.build_join(spark, table, dim_tbl, join_view.path,
+                                at_left_version=v,
+                                at_right_version=dim_state["v"], **join_kw)
+            persist(v)
+
+        def update_join_view(lo, hi, feed):
+            # the fact side reuses the shared window diff; the dim side
+            # diffs its own commits since the persisted dim resume point.
+            # A crash between this commit and persist() re-applies with a
+            # wider dim window — safe: the window batch is a recompute of
+            # the affected keys at the current heads, so re-application
+            # converges (and the higher LWW ordinal wins)
+            dim_hi = dim_tbl.current_version()
+            joinview.update_join(
+                spark, table, dim_tbl, join_view, from_left=lo,
+                from_right=dim_state["v"], to_left=hi, to_right=dim_hi,
+                left_feed=feed, **join_kw)
+            dim_state["v"] = dim_hi
+
+        join = Maintainer("join", join_view.path, build_join_view,
+                          update_join_view)
+        views.append(join)
+    if not (args.sink or args.replica or views):
+        p.error("need --sink, --replica, --agg-table, --scd2-table, "
+                "--sigindex-table, --annindex-table, --join-table, "
+                "--vocab-table and/or --spanindex-table")
+
+    from pyspark.sql import SparkSession
+
+    spark = SparkSession.builder.appName("qwery-follow").getOrCreate()
+
+    start = args.from_version
     if os.path.exists(args.state):
         with open(args.state) as fh:
             st = json.load(fh)
@@ -193,109 +301,20 @@ def main(argv=None):
     if start is None:
         start = table.current_version()
 
-    def persist(version: int) -> None:
-        tmp = args.state + ".tmp"
-        st = {"version": version, "table": table.path}
-        if dim_state["v"] is not None:
-            st["dim_version"] = dim_state["v"]
-        with open(tmp, "w") as fh:
-            json.dump(st, fh)
-        os.replace(tmp, args.state)
-
     # pin the resume point BEFORE the loop: a drain that sees no new
     # commits must still leave a state file, or the next run would
     # re-default to the then-current head and silently skip the gap
     persist(start)
 
-    # incremental-view targets: build AT the resume point when the view
-    # is missing OR is an empty v0 shell (a build that crashed between
-    # table-create and its first merge — path existence alone is NOT a
-    # completed-build signal). A completed view (version > 0) is left
-    # alone; re-building it at a later resume point would double-apply.
-    def _needs_build(path: str) -> bool:
-        if not os.path.exists(path):
-            return True
-        return LakeTable(path).current_version() == 0
-
-    agg_sum = [c for c in args.agg_sum.split(",") if c]
-    agg_min = [c for c in args.agg_min.split(",") if c]
-    agg_max = [c for c in args.agg_max.split(",") if c]
-    if args.agg_table:
-        from qwery_spark.operators.materialize import build_agg, update_agg
-
-        if _needs_build(args.agg_table):
-            build_agg(spark, table, args.agg_table, args.agg_group, agg_sum,
-                      at_version=start, min_cols=agg_min, max_cols=agg_max)
-    if args.scd2_table:
-        from qwery_spark.operators.materialize import build_scd2, update_scd2
-
-        if _needs_build(args.scd2_table):
-            build_scd2(spark, table, args.scd2_table, at_version=start)
-    if args.sigindex_table:
-        from qwery_spark.operators.sigindex import (
-            build_signature_index,
-            update_signature_index,
+    build_missing(views, start)
+    if join is not None and dim_state["v"] is None:
+        # an existing view with no recorded dim resume point cannot be
+        # continued: the dim changes since its build are unknowable
+        p.error(
+            f"--state {args.state} has no dim_version for the "
+            f"existing join view {join.path!r} — delete the "
+            "view to rebuild it at the current resume point"
         )
-
-        if _needs_build(args.sigindex_table):
-            build_signature_index(spark, table, args.sigindex_table,
-                                  text_col=args.sigindex_text,
-                                  at_version=start)
-    if args.vocab_table:
-        from qwery_spark.operators.vocab import build_vocab, update_vocab
-
-        if _needs_build(args.vocab_table):
-            build_vocab(spark, table, args.vocab_table,
-                        tokens_col=args.vocab_tokens, at_version=start)
-    if args.spanindex_table:
-        from qwery_spark.operators.spanindex import (
-            build_span_index,
-            update_span_index,
-        )
-
-        if _needs_build(args.spanindex_table):
-            build_span_index(spark, table, args.spanindex_table,
-                             tokens_col=args.vocab_tokens,
-                             length=args.spanindex_length,
-                             at_version=start)
-    join_left = [c for c in args.join_left_cols.split(",") if c]
-    join_right = [c for c in args.join_right_cols.split(",") if c]
-    if args.join_table:
-        from qwery_spark.operators.joinview import build_join, update_join
-
-        dim_tbl = LakeTable(args.join_dim)
-        if _needs_build(args.join_table):
-            # a fresh build pins BOTH resume points: fact at `start`,
-            # dim at its current head
-            dim_state["v"] = dim_tbl.current_version()
-            build_join(spark, table, dim_tbl, args.join_table,
-                       args.join_fk, join_left, join_right,
-                       how=args.join_how, at_left_version=start,
-                       at_right_version=dim_state["v"])
-            # re-pin so a drain that ships no window still records the
-            # dim resume point the build just defined
-            persist(start)
-        elif dim_state["v"] is None:
-            # an existing view with no recorded dim resume point cannot
-            # be safely continued — the dim changes since its build are
-            # unknowable from here
-            p.error(
-                f"--state {args.state} has no dim_version for the "
-                f"existing join view {args.join_table!r} — delete the "
-                "view to rebuild it at the current resume point"
-            )
-    centroids = None
-    if args.annindex_table:
-        from qwery_spark.operators.annindex import (
-            build_ann_index,
-            update_ann_index,
-        )
-
-        with open(args.annindex_centroids) as fh:
-            centroids = json.load(fh)
-        if _needs_build(args.annindex_table):
-            build_ann_index(spark, table, args.annindex_table, centroids,
-                            emb_col=args.annindex_emb, at_version=start)
 
     def sink(feed, lo, hi):
         if args.sink:
@@ -311,11 +330,6 @@ def main(argv=None):
                 epoch_id=f"follow:{hi}", feed=feed,
             )
             if args.auto_compact_files:
-                from qwery_spark.lake.maintenance import (
-                    CompactionPolicy,
-                    maybe_compact,
-                )
-
                 cluster_kw = {}
                 if args.cluster_every:
                     cluster_kw = {
@@ -329,88 +343,8 @@ def main(argv=None):
                         **cluster_kw,
                     ),
                 )
-        # incremental views share ONE preimage-bearing feed for (lo, hi]
-        # (the sink feed lacks preimages by design); every maintainer
-        # is window-epoch-keyed, so a crashed-and-restarted window
-        # no-ops — the indexes filter the preimage rows out themselves
-        if (args.agg_table or args.scd2_table or args.sigindex_table
-                or args.annindex_table or args.join_table
-                or args.vocab_table or args.spanindex_table):
-            from qwery_spark.lake.changes import read_changes
-
-            pfeed = read_changes(
-                spark, table, lo, hi, granular=False, include_preimages=True
-            ).persist()
-            try:
-                if args.agg_table:
-                    update_agg(spark, table, LakeTable(args.agg_table),
-                               args.agg_group, agg_sum, lo, hi, feed=pfeed,
-                               min_cols=agg_min, max_cols=agg_max)
-                if args.scd2_table:
-                    update_scd2(spark, table, LakeTable(args.scd2_table),
-                                lo, hi, feed=pfeed)
-                if args.sigindex_table:
-                    update_signature_index(
-                        spark, table, LakeTable(args.sigindex_table),
-                        lo, hi, text_col=args.sigindex_text, feed=pfeed,
-                    )
-                if args.annindex_table:
-                    update_ann_index(
-                        spark, table, LakeTable(args.annindex_table),
-                        centroids, lo, hi, emb_col=args.annindex_emb,
-                        feed=pfeed,
-                    )
-                if args.vocab_table:
-                    update_vocab(spark, table, LakeTable(args.vocab_table),
-                                 args.vocab_tokens, lo, hi, feed=pfeed)
-                if args.spanindex_table:
-                    update_span_index(
-                        spark, table, LakeTable(args.spanindex_table),
-                        args.vocab_tokens, args.spanindex_length,
-                        lo, hi, feed=pfeed,
-                    )
-                if args.join_table:
-                    # the fact side reuses the shared window diff; the
-                    # dim side diffs its own commits since the persisted
-                    # dim resume point. A crash between this commit and
-                    # persist() re-applies with a wider dim window —
-                    # safe: the window batch is a recompute of the
-                    # affected keys at the current heads, so
-                    # re-application converges (and the higher LWW
-                    # ordinal wins)
-                    dim_hi = dim_tbl.current_version()
-                    update_join(
-                        spark, table, dim_tbl, LakeTable(args.join_table),
-                        args.join_fk, join_left, join_right,
-                        lo, dim_state["v"], to_left=hi, to_right=dim_hi,
-                        how=args.join_how, left_feed=pfeed,
-                    )
-                    dim_state["v"] = dim_hi
-            finally:
-                pfeed.unpersist()
-            if args.auto_compact_views:
-                from qwery_spark.lake.maintenance import (
-                    CompactionPolicy,
-                    maybe_compact,
-                )
-
-                bound = args.auto_compact_views
-                # the maintained views are derived MOR tables whose
-                # per-window delta appends accumulate exactly like the
-                # replica's — the same read-amplification bound applies.
-                # (the agg rollup is COW and self-compacting.)
-                for path, policy in (
-                    (args.scd2_table, CompactionPolicy(max_files_per_bucket=bound)),
-                    (args.sigindex_table, CompactionPolicy(max_files_per_bucket=bound)),
-                    (args.annindex_table, CompactionPolicy(
-                        max_files_per_bucket=bound, sort_cols=["cell"])),
-                    # the span index is MOR too (vocab is COW and
-                    # self-compacting)
-                    (args.spanindex_table, CompactionPolicy(
-                        max_files_per_bucket=bound)),
-                ):
-                    if path:
-                        maybe_compact(spark, LakeTable(path), policy)
+        # the views need preimages, which the sink feed lacks by design
+        maintain_window(spark, table, views, lo, hi)
 
     from qwery_spark.lake.changes import VersionExpiredError
 

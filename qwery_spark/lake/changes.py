@@ -749,10 +749,13 @@ def replicate(
 
     Uses the COARSE feed (granular=False): a replica only needs the net
     endpoint diff — two scans + one join regardless of how many commits
-    the range spans — and the LWW reduction below makes coarse and
-    granular feeds converge to the same replica state anyway (a key
-    that appeared and disappeared entirely inside the range leaves no
-    visible state either way). Deletes become 'D' events carrying the
+    the range spans — and the per-key LWW makes coarse and granular
+    feeds converge to the same replica state anyway (a key that
+    appeared and disappeared entirely inside the range leaves no
+    visible state either way). A MOR destination takes the raw window
+    events: the in-batch LWW happens in append_changes' one bucket
+    shuffle. A COW destination first reduces them to per-key winners,
+    since merge_changes takes one row per key. Deletes become 'D' events carrying the
     tombstone's ordinal, so the replica's straggler guard keeps working
     across replication boundaries. Incremental feeds applied in order
     and a single full-range feed produce the same replica.
@@ -760,7 +763,7 @@ def replicate(
     Pass ``feed`` to reuse an already-built changelog DataFrame for the
     same range (a follower shipping the window to parquet AND a replica
     must not pay the endpoint scans twice); granular or coarse both
-    work — the LWW reduction normalizes them.
+    work — the per-key LWW normalizes them.
 
     Source DDL inside the range replays onto the replica FIRST
     (sync_schema_from_source): the feed carries the to-version schema,
@@ -787,6 +790,13 @@ def replicate(
         F.when(F.col(CHANGE_TYPE_COL) == "delete", "D").otherwise("U").alias("op"),
         F.col(ORDINAL_COL).alias("ordinal"),
     )
+    # honor the REPLICA's write mode: MOR appends the window as delta
+    # files (O(batch) write amplification; run_follow
+    # --auto-compact-files bounds their count), COW rewrites buckets
+    from qwery_spark.lake.merge import append_changes, merge_changes
+
+    if dst.snapshot().write_mode == "mor":
+        return append_changes(spark, dst, events, epoch_id=epoch_id)
     winners = (
         events.groupBy(key)
         .agg(
@@ -803,12 +813,4 @@ def replicate(
             "ordinal",
         )
     )
-    # honor the REPLICA's write mode: a MOR destination takes the window
-    # as a delta append (O(batch) write amplification; its delta files
-    # then accumulate, which is what run_follow --auto-compact-files
-    # bounds), a COW destination merges (bucket rewrite, read-optimized)
-    from qwery_spark.lake.merge import append_changes, merge_changes
-
-    if dst.snapshot().write_mode == "mor":
-        return append_changes(spark, dst, winners, epoch_id=epoch_id)
     return merge_changes(spark, dst, winners, epoch_id=epoch_id)

@@ -25,11 +25,13 @@ from __future__ import annotations
 import os
 import time
 from dataclasses import dataclass, field
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from qwery_spark.cdc.apply import ApplyResult, apply_changes
+from qwery_spark.lake.maintenance import CompactionPolicy, maybe_compact
 from qwery_spark.lake.table import LakeTable
 from qwery_spark.schema import EVENT_SCHEMA
 
@@ -378,8 +380,6 @@ def run_stream(
         # skew-aware (hot buckets compact early, cold ones never), the
         # preferred mode over the fixed cadence below
         if compaction_policy is not None and not res.merge.skipped:
-            from qwery_spark.lake.maintenance import maybe_compact
-
             run.maintenance.append(maybe_compact(spark, table, compaction_policy))
         # periodic MOR compaction keeps the delta-file count (and thus
         # read-side resolution cost) bounded during long tails
@@ -503,3 +503,60 @@ def follow_changes(
         if max_polls is None or polls < max_polls:
             sleep(poll_sec)
     return last
+
+
+@dataclass
+class Maintainer:
+    """One incremental view a follower keeps current off the change
+    feed: ``build(at_version)`` materializes it from the source state at
+    the resume point, ``update(lo, hi, feed)`` folds the window (lo, hi]
+    in from the shared preimage-bearing ``feed``, and ``policy`` is the
+    ``CompactionPolicy`` bounding a MOR view's delta files (None for the
+    self-compacting COW views).
+
+    Build/crash contract (``build_missing``): a view is built when its
+    path is missing OR is an empty v0 shell — a build that crashed
+    between table-create and its first commit leaves one, so path
+    existence is not a completed-build signal. A completed view
+    (version > 0) is never rebuilt: rebuilding it at a later resume
+    point would double-apply the windows in between.
+
+    Window-epoch contract (``maintain_window``): every update is keyed
+    by its window, so a crashed-and-restarted window re-applies as a
+    no-op; updates drop the feed's preimage rows themselves."""
+
+    name: str
+    path: str
+    build: Callable[[int], object]
+    update: Callable[[int, int, DataFrame], object]
+    policy: CompactionPolicy | None = None
+
+
+def build_missing(maintainers: list[Maintainer], at_version: int) -> None:
+    """Build, at ``at_version``, every maintainer whose view is missing
+    or an empty v0 shell (the Maintainer build/crash contract)."""
+    for m in maintainers:
+        if not os.path.exists(m.path) or LakeTable(m.path).current_version() == 0:
+            m.build(at_version)
+
+
+def maintain_window(spark: SparkSession, table: LakeTable,
+                    maintainers: list[Maintainer], lo: int, hi: int) -> None:
+    """Advance every maintainer over the window (lo, hi]: the updates
+    share ONE persisted preimage-bearing feed and run in registry order,
+    then each view with a policy gets its compaction tick."""
+    if not maintainers:
+        return
+    from qwery_spark.lake.changes import read_changes
+
+    feed = read_changes(
+        spark, table, lo, hi, granular=False, include_preimages=True
+    ).persist()
+    try:
+        for m in maintainers:
+            m.update(lo, hi, feed)
+    finally:
+        feed.unpersist()
+    for m in maintainers:
+        if m.policy is not None:
+            maybe_compact(spark, LakeTable(m.path), m.policy)

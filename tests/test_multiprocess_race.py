@@ -88,34 +88,58 @@ def _policy_worker(path: str, done_flag: str, err_file: str, stats_file: str):
 
 
 def _follow_worker(path: str, done_flag: str, err_file: str, out_json: str,
-                   replica_path: str, agg_path: str, scd2_path: str):
-    """run_follow-style window maintenance DURING the race (r5 verdict
-    task 6): tail the racing table's commit log and keep a replica, a
-    min/max rollup, and an SCD2 history current off each window —
-    exactly the deployment shape (ingest + compaction daemon + follower
-    all live at once)."""
+                   replica_path: str, agg_path: str, scd2_path: str,
+                   vocab_path: str):
+    """run_follow-style window maintenance DURING the race: tail the
+    racing table's commit log and keep a replica, plus a min/max rollup,
+    an SCD2 history and a vocabulary view off the follower's maintainer
+    registry, current off each window — exactly the deployment shape
+    (ingest + compaction daemon + follower all live at once)."""
     try:
         from qwery_spark.lake.changes import read_changes, replicate
         from qwery_spark.lake.table import LakeTable
-        from qwery_spark.operators.materialize import (
-            build_agg,
-            build_scd2,
-            update_agg,
-            update_scd2,
-        )
+        from qwery_spark.operators import materialize, vocab
         from qwery_spark.schema import TARGET_SCHEMA
         from qwery_spark.session import get_spark
+        from qwery_spark.streaming.stream import (
+            Maintainer, build_missing, maintain_window)
 
         spark = get_spark(
             "race-follow", cpus=4, shuffle_partitions=4,
             extra_conf={"spark.ui.enabled": "false"},
         )
         tbl = LakeTable(path)
+        extrema = {"min_cols": ["n_tok"], "max_cols": ["n_tok"]}
+        views = [
+            Maintainer(
+                "agg", agg_path,
+                lambda v: materialize.build_agg(
+                    spark, tbl, agg_path, "source", ["n_tok"], n_buckets=4,
+                    at_version=v, **extrema),
+                lambda lo, hi, feed: materialize.update_agg(
+                    spark, tbl, LakeTable(agg_path), "source", ["n_tok"],
+                    lo, hi, feed=feed, **extrema),
+            ),
+            Maintainer(
+                "scd2", scd2_path,
+                lambda v: materialize.build_scd2(
+                    spark, tbl, scd2_path, n_buckets=4, at_version=v),
+                lambda lo, hi, feed: materialize.update_scd2(
+                    spark, tbl, LakeTable(scd2_path), lo, hi, feed=feed),
+            ),
+            Maintainer(
+                "vocab", vocab_path,
+                lambda v: vocab.build_vocab(
+                    spark, tbl, vocab_path, "tokens", n_buckets=4,
+                    at_version=v),
+                lambda lo, hi, feed: vocab.update_vocab(
+                    spark, tbl, LakeTable(vocab_path), "tokens", lo, hi,
+                    feed=feed),
+            ),
+        ]
         # resume point 0: views built from the (empty) v0 snapshot,
         # then advanced purely from change-feed windows
-        build_agg(spark, tbl, agg_path, "source", ["n_tok"], n_buckets=4,
-                  at_version=0, min_cols=["n_tok"], max_cols=["n_tok"])
-        build_scd2(spark, tbl, scd2_path, n_buckets=4, at_version=0)
+        build_missing(views, 0)
         LakeTable.create(replica_path, TARGET_SCHEMA, n_buckets=4,
                          write_mode="mor")
         last = 0
@@ -126,18 +150,7 @@ def _follow_worker(path: str, done_flag: str, err_file: str, out_json: str,
                 feed = read_changes(spark, tbl, last, head, granular=False)
                 replicate(spark, tbl, LakeTable(replica_path), last, head,
                           epoch_id=f"follow:{head}", feed=feed)
-                pfeed = read_changes(
-                    spark, tbl, last, head, granular=False,
-                    include_preimages=True,
-                ).persist()
-                try:
-                    update_agg(spark, tbl, LakeTable(agg_path), "source",
-                               ["n_tok"], last, head, feed=pfeed,
-                               min_cols=["n_tok"], max_cols=["n_tok"])
-                    update_scd2(spark, tbl, LakeTable(scd2_path), last, head,
-                                feed=pfeed)
-                finally:
-                    pfeed.unpersist()
+                maintain_window(spark, tbl, views, last, head)
                 last = head
                 windows += 1
             elif os.path.exists(done_flag):
@@ -159,9 +172,10 @@ def _follow_worker(path: str, done_flag: str, err_file: str, out_json: str,
 def test_three_process_race_with_follower(spark, tmp_table_dir):
     """Ingest writer + compaction-policy daemon + live follower in THREE
     OS processes against one table: the follower's replica, min/max
-    rollup, and SCD2 history must come out EXACT vs the serial oracle /
-    a from-scratch recompute, despite racing window boundaries that
-    interleave arbitrarily with data and compaction commits."""
+    rollup, SCD2 history and vocabulary view must come out EXACT vs the
+    serial oracle / a from-scratch recompute, despite racing window
+    boundaries that interleave arbitrarily with data and compaction
+    commits."""
     import pandas as pd
     from pyspark.sql import functions as F
 
@@ -177,6 +191,7 @@ def test_three_process_race_with_follower(spark, tmp_table_dir):
     replica = tmp_table_dir + "/replica3"
     agg = tmp_table_dir + "/agg3"
     scd2 = tmp_table_dir + "/scd2_3"
+    vocab = tmp_table_dir + "/vocab3"
 
     ctx = mp.get_context("spawn")
     procs = [
@@ -185,7 +200,7 @@ def test_three_process_race_with_follower(spark, tmp_table_dir):
                     args=(path, done_flag, errs[1], stats_file)),
         ctx.Process(target=_follow_worker,
                     args=(path, done_flag, errs[2], follow_out,
-                          replica, agg, scd2)),
+                          replica, agg, scd2, vocab)),
     ]
     for p in procs:
         p.start()
@@ -246,6 +261,24 @@ def test_three_process_race_with_follower(spark, tmp_table_dir):
     assert [
         -1 if r["n_tok"] is None else r["n_tok"] for r in open_rows
     ] == list(want["n_tok"].fillna(-1))
+
+    # vocabulary view == a from-scratch exploded recompute
+    got_v = sorted(
+        tuple(x)
+        for x in LT(vocab).read(spark).select("token", "cnt", "n_docs").collect()
+    )
+    want_v = sorted(
+        tuple(x)
+        for x in LT(path).read(spark)
+        .select(F.explode("tokens").alias("token"), "doc_id")
+        .groupBy(F.col("token").cast("long").alias("token"))
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("cnt"),
+            F.countDistinct("doc_id").cast("long").alias("n_docs"),
+        )
+        .collect()
+    )
+    assert got_v == want_v and len(want_v) > 0
 
     with open(follow_out) as f:
         fo = json.load(f)

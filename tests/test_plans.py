@@ -215,6 +215,46 @@ def test_single_pass_merge_one_shuffle_no_join(spark, tmp_table_dir, monkeypatch
     assert executed.count("FileScan parquet") == 1
 
 
+def test_mor_replicate_adds_one_shuffle_to_its_feed(spark, tmp_table_dir, monkeypatch):
+    """A replicate into a MOR replica adds exactly ONE exchange to the
+    read_changes feed it consumes: the raw window events go straight to
+    append_changes, whose bucket shuffle also resolves the in-batch LWW
+    (no separate per-key winners shuffle). Replica state and merge
+    counts still match the source window."""
+    from pyspark.sql import functions as F
+
+    from qwery_spark.lake.changes import read_changes, replicate
+    from qwery_spark.lake.merge import append_changes
+    from qwery_spark.lake.table import LakeTable
+    from qwery_spark.schema import TARGET_SCHEMA
+
+    src = LakeTable.create(tmp_table_dir + "/src", TARGET_SCHEMA, n_buckets=8,
+                           write_mode="mor")
+    dst = LakeTable.create(tmp_table_dir + "/dst", TARGET_SCHEMA, n_buckets=8,
+                           write_mode="mor")
+    append_changes(spark, src, _keyed_batch(spark, range(200), 1))  # v1
+    replicate(spark, src, dst, 0, 1)
+    append_changes(spark, src, _keyed_batch(spark, range(66), 2))   # v2
+    append_changes(spark, src, _keyed_batch(spark, range(66, 100), 3)
+                   .withColumn("op", F.lit("D")))                   # v3
+
+    feed = read_changes(spark, src, 1, 3, granular=False)
+    feed_exchanges = (
+        feed._jdf.queryExecution().executedPlan().toString().count("Exchange")
+    )
+    plans = _spy_write_plans(monkeypatch)
+    stats = replicate(spark, src, dst, 1, 3, feed=feed)
+    assert plans[-1].count("Exchange") == feed_exchanges + 1, plans[-1]
+    assert (stats.rows_upserted, stats.rows_deleted) == (66, 34)
+
+    def state(t):
+        return sorted(
+            (r["doc_id"], tuple(r["tokens"])) for r in t.read(spark).collect()
+        )
+
+    assert state(dst) == state(src) and len(state(src)) == 166
+
+
 def test_ntile_no_single_partition_window(spark):
     """q_ntile must rank via the range-partition + offset scheme — a
     global Window.orderBy would show an Exchange SinglePartition that

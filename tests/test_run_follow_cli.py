@@ -8,6 +8,8 @@ import os
 import subprocess
 import sys
 
+import pytest
+
 from qwery_spark.datagen import make_events
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -89,11 +91,15 @@ def test_run_follow_cli_drain_and_resume(spark, tmp_path):
 def test_run_follow_cli_incremental_views(spark, tmp_path):
     """Follower maintaining incremental views: the rollup and SCD2
     history are built at the resume point and advanced per window —
-    final rollup equals a from-scratch recompute of the source."""
+    final rollup equals a from-scratch recompute of the source. The
+    SCD2 path starts as an empty v0 shell (a build that crashed between
+    table-create and its first commit), which must be built, not
+    mistaken for a completed view."""
     from pyspark.sql import functions as F
 
     from qwery_spark.cdc.apply import apply_changes
     from qwery_spark.lake.table import LakeTable
+    from qwery_spark.operators.materialize import _reuse_or_create, _scd2_schema
     from qwery_spark.schema import EVENT_SCHEMA, TARGET_SCHEMA
 
     table = str(tmp_path / "src")
@@ -107,9 +113,13 @@ def test_run_follow_cli_incremental_views(spark, tmp_path):
     df = spark.createDataFrame(ev.iloc[:700], schema=EVENT_SCHEMA)
     apply_changes(spark, src, df, epoch_id=0, collect_stats=False)
 
-    # first run: builds both views at the pinned start, drains window 1
+    # first run: builds the views at the pinned start, drains window 1
     df = spark.createDataFrame(ev.iloc[700:1100], schema=EVENT_SCHEMA)
     apply_changes(spark, src, df, epoch_id=1, collect_stats=False)
+    shell = _reuse_or_create(
+        scd2, _scd2_schema("doc_id", src.snapshot()), 8, "hist_id", "mor"
+    )
+    assert shell.current_version() == 0
     r = _run_follow([
         "--table", table, "--state", state, "--from-version", "1",
         "--agg-table", agg, "--agg-group", "source", "--agg-sum", "n_tok",
@@ -487,3 +497,22 @@ def test_run_follow_cli_join_view(spark, tmp_path):
         "--table", table, "--state", state, *join_args, "--max-polls", "1",
     ])
     assert bad.returncode != 0 and "no dim_version" in bad.stderr
+
+
+@pytest.mark.parametrize("args, message", [
+    ([], "need --sink, --replica, --agg-table"),
+    (["--agg-table", "agg"], "--agg-table requires --agg-group"),
+    (["--join-table", "view", "--join-dim", "dim"],
+     "--join-table requires --join-dim, --join-fk and --join-right-cols"),
+    (["--annindex-table", "ann"],
+     "--annindex-table requires --annindex-centroids"),
+], ids=["no-output", "agg-no-group", "join-no-fk", "ann-no-centroids"])
+def test_run_follow_cli_argument_errors(tmp_path, args, message):
+    """Misuse exits 2 with its usage message before any Spark session
+    starts (so these cost one interpreter start each)."""
+    r = _run_follow(["--table", str(tmp_path / "src"),
+                     "--state", str(tmp_path / "state.json"), *args],
+                    timeout=120)
+    assert r.returncode == 2, (r.returncode, r.stderr[-1500:])
+    assert message in r.stderr
+    assert not os.path.exists(tmp_path / "state.json")
