@@ -6,10 +6,11 @@ offset-addressed resumable ingestion) as an idiomatic Spark pipeline:
 
   ordered change events (binlog/WAL-tail shaped)
     -> Structured Streaming / batch replay
-    -> vectorized Arrow validation + quarantine
-    -> per-key last-writer-wins dedup (partial-agg, skew-proof)
-    -> bucket-pruned copy-on-write MERGE into a snapshot-versioned
-       lake table (Iceberg-shaped; epoch-keyed idempotent commits)
+    -> Catalyst validation + quarantine
+    -> keyed write into a snapshot-versioned lake table (Iceberg-shaped;
+       epoch-keyed idempotent commits): per-key last-writer-wins inside
+       its one bucket shuffle, then a merge-on-read delta append or a
+       bucket-pruned copy-on-write MERGE
     -> per-batch lineage + metrics rows
 
 Reference semantics honored (see SURVEY.md §7.0):

@@ -3,8 +3,9 @@
     events (one micro-batch of the binlog/WAL tail)
       ├─ DDL events  → schema evolution on the lake table (ordinal order)
       ├─ validation  → quarantine (never fatal; reference: ROWS_REJECTED)
-      ├─ LWW dedup   → one winner row per key (partial-agg, skew-proof)
-      └─ MERGE       → bucket-pruned copy-on-write, epoch-idempotent
+      └─ write       → per-key last writer wins inside the write's one
+                       bucket shuffle: MOR delta append or bucket-pruned
+                       COW rewrite, epoch-idempotent
     + one lineage row per epoch (reference: per-run Statistics,
       app/jvm/core/.../sources/Statistics.scala:17-25)
 
@@ -25,7 +26,6 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from qwery_spark.cdc.dedup import lww_dedup
 from qwery_spark.cdc.validate import REASON_COL, with_reject_reason
 from qwery_spark.lake.merge import MergeStats, append_changes, merge_changes
 from qwery_spark.lake.table import LakeTable
@@ -77,7 +77,6 @@ def apply_changes(
     table: LakeTable,
     events: DataFrame,
     epoch_id: int | None = None,
-    validation: str = "builtin",
     vocab: int = VOCAB_SIZE,
     quarantine_dir: str | None = None,
     lineage_dir: str | None = None,
@@ -131,7 +130,7 @@ def apply_changes(
     # the filter is lazy (fused into the next job) — only the collect
     # above costs a job, so the DDL guard stays on unconditionally
     data = events.filter(F.col("op") != "DDL")
-    annotated = with_reject_reason(data, mode=validation, vocab=vocab)
+    annotated = with_reject_reason(data, vocab=vocab)
 
     # batch statistics ride the main job via the Observation API
     # (CollectMetrics node) — NO extra pass over the data. Reference
@@ -179,17 +178,13 @@ def apply_changes(
     ]
     valid = annotated.filter(F.col(REASON_COL).isNull()).drop(*drop_cols)
     # write-mode dispatch (table property, Iceberg write.merge.mode style):
-    # cow = bucket-pruned rewrite MERGE over pre-deduped winners;
-    # mor = O(batch) delta append (dedup fused into its single shuffle)
-    if table.snapshot().write_mode == "mor":
-        res.merge = append_changes(
-            spark, table, valid, epoch_id=epoch_key, collect_stats=collect_stats
-        )
-    else:
-        deduped = lww_dedup(valid, key="doc_id", ordinal="ordinal")
-        res.merge = merge_changes(
-            spark, table, deduped, epoch_id=epoch_key, collect_stats=collect_stats
-        )
+    # both take the valid raw events and resolve the in-batch LWW in
+    # their one bucket shuffle — mor = O(batch) delta append, cow =
+    # bucket-pruned rewrite MERGE
+    write = append_changes if table.snapshot().write_mode == "mor" else merge_changes
+    res.merge = write(
+        spark, table, valid, epoch_id=epoch_key, collect_stats=collect_stats
+    )
 
     # read even when the merge was an empty-batch no-op: observed_or
     # falls back to a skinny agg if no action fired the metrics node

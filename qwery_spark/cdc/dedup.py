@@ -6,45 +6,30 @@ order, so the last event (highest offset/ordinal) for a key wins
 devices/Record.scala:9). Set-oriented restatement: argmax by ordinal
 per key.
 
-Strategy choice (scale rationale):
+``lww_dedup`` is a standalone operator (the suite's CDC queries use
+it). The keyed writes do not call it: append_changes and merge_changes
+resolve the same LWW inside their own bucket shuffle
+(lake.merge._winners), so a batch is never shuffled on the key first.
 
-  * DEFAULT ``lww_dedup``: hash aggregation with ``max_by`` over a
-    payload struct. Spark's hash agg does MAP-SIDE PARTIAL COMBINE, so
-    a Zipf-hot key (millions of updates for one doc_id in a batch)
-    collapses to one row per map task BEFORE the shuffle — the reducer
-    receives at most #map_tasks rows per key. Skew is structurally
-    bounded; no salting needed. This is the plan you want at 100 TB.
-
-  * ``lww_dedup_window``: row_number() OVER (PARTITION BY key ORDER BY
-    ordinal DESC) == 1. Historically the classic skew trap (all rows of
-    a key co-located + sorted on one task; AQE skew-join splitting does
-    not apply to window partitions). MEASURED FINDING (Spark >= 3.5 /
-    4.x): the rank<=1 filter triggers WindowGroupLimitExec with a
-    PARTIAL pass before the exchange — a map-side per-key top-1 that
-    bounds skew exactly like the agg's partial combine. Verified in
-    tests/test_plans.py and tools/skew_bench.py (2.4M-row hot key:
-    window 0.86x of max_by). On older Sparks, or for rank>k windows
-    where the partial pass keeps k rows per key per task, max_by agg
-    remains the safe default — and it fuses with the MOR bucket layout
-    into a single shuffle (lake.merge.append_changes).
-
-  * ``lww_dedup_salted_window``: two-phase salted mitigation — only
-    needed where WindowGroupLimit is unavailable; measurably slower
-    (1.4-1.6x) when it is.
-
-tools/skew_bench.py measures all three; results in BASELINE.md §BENCH.
+Why ``max_by`` is the one dedup: a hash aggregation with ``max_by``
+over a payload struct gets Spark's map-side partial combine, so a
+Zipf-hot key (millions of updates for one doc_id in a batch) collapses
+to one row per map task before the shuffle — skew is bounded with no
+salting (plan-gated in tests/test_plans.py). History: two window
+formulations were kept beside it for comparison and then removed, as
+neither had a caller outside that comparison. On 8M events with 70% of
+the updates on one key, a ``row_number() == 1`` window took 0.86x of
+max_by's wall (Spark >= 3.5 plans a partial WindowGroupLimit before the
+exchange) and a two-phase salted window 1.41x (BASELINE.md, "Skew
+stress").
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 META_COLS = ("ordinal", "op")
-
-
-def _payload_cols(df: DataFrame, key: str) -> list[str]:
-    return [c for c in df.columns if c != key and c not in META_COLS]
 
 
 def lww_dedup(events: DataFrame, key: str = "doc_id", ordinal: str = "ordinal") -> DataFrame:
@@ -54,7 +39,7 @@ def lww_dedup(events: DataFrame, key: str = "doc_id", ordinal: str = "ordinal") 
     (key, op in {'U','D'}, ordinal, <payload>) — I normalizes to 'U'
     because reference UPSERT makes INSERT-on-existing behave as UPDATE.
     """
-    pcols = _payload_cols(events, key)
+    pcols = [c for c in events.columns if c != key and c not in META_COLS]
     winner = F.max_by(
         F.struct(F.col("op"), *[F.col(f"`{c}`") for c in pcols]), F.col(ordinal)
     ).alias("w")
@@ -65,44 +50,3 @@ def lww_dedup(events: DataFrame, key: str = "doc_id", ordinal: str = "ordinal") 
         F.col(ordinal),
     ] + [F.col(f"w.`{c}`").alias(c) for c in pcols]
     return out.select(*sel)
-
-
-def lww_dedup_window(events: DataFrame, key: str = "doc_id", ordinal: str = "ordinal") -> DataFrame:
-    """Window formulation (single-phase; skew-prone — bench comparison)."""
-    pcols = _payload_cols(events, key)
-    w = Window.partitionBy(key).orderBy(F.col(ordinal).desc())
-    out = (
-        events.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-    sel = [
-        F.col(key),
-        F.when(F.col("op") == "D", F.lit("D")).otherwise(F.lit("U")).alias("op"),
-        F.col(ordinal),
-    ] + [F.col(f"`{c}`") for c in pcols]
-    return out.select(*sel)
-
-
-def lww_dedup_salted_window(
-    events: DataFrame, key: str = "doc_id", ordinal: str = "ordinal", n_salts: int = 32
-) -> DataFrame:
-    """Two-phase salted window: phase 1 reduces each (key, salt) shard to
-    its local winner (hot key spread over n_salts tasks), phase 2 picks
-    the global winner among <= n_salts shard winners per key."""
-    pcols = _payload_cols(events, key)
-    salted = events.withColumn("_salt", F.pmod(F.xxhash64(F.col(ordinal)), F.lit(n_salts)))
-    w1 = Window.partitionBy(key, "_salt").orderBy(F.col(ordinal).desc())
-    phase1 = salted.withColumn("_rn", F.row_number().over(w1)).filter(F.col("_rn") == 1)
-    w2 = Window.partitionBy(key).orderBy(F.col(ordinal).desc())
-    phase2 = (
-        phase1.withColumn("_rn2", F.row_number().over(w2))
-        .filter(F.col("_rn2") == 1)
-        .drop("_rn", "_rn2", "_salt")
-    )
-    sel = [
-        F.col(key),
-        F.when(F.col("op") == "D", F.lit("D")).otherwise(F.lit("U")).alias("op"),
-        F.col(ordinal),
-    ] + [F.col(f"`{c}`") for c in pcols]
-    return phase2.select(*sel)

@@ -11,39 +11,31 @@ Rules (a row must pass ALL to be applied):
   R3 n_tok must equal size(tokens)            (FIXTURES.md F1 invariant)
   R4 every token must lie in [0, VOCAB_SIZE)
 
-Two interchangeable implementations, equality-tested against each
-other (tests/test_validate.py):
-
-  * ``mode='builtin'`` (default): pure Catalyst expressions —
-    F.size / F.exists — whole-stage-codegen'd JVM work, zero Python.
-  * ``mode='arrow'``: a vectorized Arrow pandas_udf that operates on
-    the COLUMNAR buffers (pyarrow.compute list kernels +
-    numpy reduceat over list offsets) — no per-row Python loop, per
-    BASELINE.json input_hint. This is the extension point for checks
-    Catalyst cannot express (e.g. learned filters over token arrays).
+Pure Catalyst expressions (F.size / F.exists) — whole-stage-codegen'd
+JVM work, zero Python. An Arrow pandas_udf form of the same rules
+measured 1.9x slower on a 25k-event batch (CHANGES.md); a UDF is for a
+check Catalyst cannot express. The replay oracle's ``_valid``
+(cdc/oracle.py) is the independent check (tests/test_validate.py,
+tests/test_cdc_batch.py).
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
 from qwery_spark.schema import VOCAB_SIZE
 
 REASON_COL = "reject_reason"
 
 
-def _builtin_reason(vocab: int):
+def _reason(vocab: int):
     has_payload = F.col("op").isin("I", "U")
     return (
         F.when((F.col("op") != "DDL") & F.col("doc_id").isNull(), F.lit("null_doc_id"))
         .when(has_payload & F.col("tokens").isNull(), F.lit("null_tokens"))
         # null-safe: n_tok NULL with a non-null payload is a mismatch, not
-        # a three-valued-logic pass (must agree with arrow mode + oracle)
+        # a three-valued-logic pass (must agree with the oracle)
         .when(
             has_payload & ~F.col("n_tok").eqNullSafe(F.size("tokens")),
             F.lit("n_tok_mismatch"),
@@ -57,68 +49,14 @@ def _builtin_reason(vocab: int):
     )
 
 
-def _make_arrow_reason(vocab: int):
-    @pandas_udf("string")
-    def _reason(op: pd.Series, doc_id: pd.Series, tokens: pd.Series, n_tok: pd.Series) -> pd.Series:
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        n = len(op)
-        opv = op.to_numpy(dtype=object)
-        is_ddl = opv == "DDL"
-        has_payload = (opv == "I") | (opv == "U")
-
-        tok = pa.Array.from_pandas(tokens, type=pa.list_(pa.int32()))
-        lens = pc.list_value_length(tok).to_numpy(zero_copy_only=False).astype(float)
-        tok_null = pc.is_null(tok).to_numpy(zero_copy_only=False)
-
-        # per-row min/max of list values via segment reduction over offsets
-        # (columnar — no per-row Python). Offsets come from the arrow buffer.
-        flat_arr = pc.list_flatten(tok)
-        flat = flat_arr.to_numpy(zero_copy_only=False).astype(np.int64)
-        row_len = np.where(tok_null, 0, np.nan_to_num(lens, nan=0)).astype(np.int64)
-        offsets = np.zeros(n + 1, dtype=np.int64)
-        np.cumsum(row_len, out=offsets[1:])
-        starts = offsets[:-1]
-        nonempty = row_len > 0
-        rmin = np.full(n, 0, dtype=np.int64)
-        rmax = np.full(n, 0, dtype=np.int64)
-        if nonempty.any() and len(flat):
-            mins = np.minimum.reduceat(flat, starts[nonempty])
-            maxs = np.maximum.reduceat(flat, starts[nonempty])
-            rmin[nonempty] = mins
-            rmax[nonempty] = maxs
-
-        ntok = n_tok.to_numpy(dtype=float, na_value=np.nan)
-        doc_null = doc_id.isna().to_numpy()
-
-        out = np.full(n, None, dtype=object)
-        bad_range = has_payload & ~tok_null & ((rmin < 0) | (rmax >= vocab))
-        out[bad_range] = "token_out_of_range"
-        mism = has_payload & ~tok_null & (np.nan_to_num(lens, nan=-1) != np.nan_to_num(ntok, nan=-2))
-        out[mism] = "n_tok_mismatch"
-        out[has_payload & tok_null] = "null_tokens"
-        out[(~is_ddl) & doc_null] = "null_doc_id"
-        return pd.Series(out)
-
-    return _reason
-
-
-def with_reject_reason(events: DataFrame, mode: str = "builtin", vocab: int = VOCAB_SIZE) -> DataFrame:
+def with_reject_reason(events: DataFrame, vocab: int = VOCAB_SIZE) -> DataFrame:
     """Annotate events with a null-if-valid ``reject_reason`` column."""
-    if mode == "builtin":
-        return events.withColumn(REASON_COL, _builtin_reason(vocab))
-    if mode == "arrow":
-        fn = _make_arrow_reason(vocab)
-        return events.withColumn(
-            REASON_COL, fn(F.col("op"), F.col("doc_id"), F.col("tokens"), F.col("n_tok"))
-        )
-    raise ValueError(f"unknown validation mode: {mode}")
+    return events.withColumn(REASON_COL, _reason(vocab))
 
 
-def split_valid(events: DataFrame, mode: str = "builtin", vocab: int = VOCAB_SIZE):
+def split_valid(events: DataFrame, vocab: int = VOCAB_SIZE):
     """Return (valid_events_without_reason_col, quarantined_with_reason)."""
-    annotated = with_reject_reason(events, mode, vocab)
+    annotated = with_reject_reason(events, vocab)
     valid = annotated.filter(F.col(REASON_COL).isNull()).drop(REASON_COL)
     rejected = annotated.filter(F.col(REASON_COL).isNotNull())
     return valid, rejected

@@ -1002,7 +1002,6 @@ class ScriptEngine:
         here made explicit via the ordinal column)."""
         from pyspark.sql import functions as F
 
-        from qwery_spark.cdc.dedup import lww_dedup
         from qwery_spark.lake.merge import append_changes, merge_changes
         from qwery_spark.lake.table import open_lake
 
@@ -1056,10 +1055,7 @@ class ScriptEngine:
         else:
             # UPDATE (matched-only) always goes through the COW merge —
             # a blind MOR append would insert unmatched keys
-            stats = merge_changes(
-                self.spark, tbl, lww_dedup(df, key=key_col),
-                insert_missing=insert_missing,
-            )
+            stats = merge_changes(self.spark, tbl, df, insert_missing=insert_missing)
         return self.spark.createDataFrame(
             [(stats.rows_upserted, stats.rows_deleted, stats.rows_stale)],
             "ROWS_UPSERTED long, ROWS_DELETED long, ROWS_STALE long",
@@ -1084,7 +1080,6 @@ class ScriptEngine:
         """
         from pyspark.sql import functions as F
 
-        from qwery_spark.cdc.dedup import lww_dedup
         from qwery_spark.lake.merge import ENGINE_COLS, merge_changes
         from qwery_spark.lake.table import open_lake
 
@@ -1150,9 +1145,7 @@ class ScriptEngine:
         try:
             rejected = batch.filter(F.col("_bad")).count()
             good = batch.filter(~F.col("_bad")).drop("_bad")
-            stats = merge_changes(
-                spark, tbl, lww_dedup(good, key=key_col), insert_missing=False
-            )
+            stats = merge_changes(spark, tbl, good, insert_missing=False)
         finally:
             batch.unpersist()
         return self.spark.createDataFrame(
@@ -1169,7 +1162,6 @@ class ScriptEngine:
         the normal MERGE/tombstone machinery applies them."""
         from pyspark.sql import functions as F
 
-        from qwery_spark.cdc.dedup import lww_dedup
         from qwery_spark.lake.merge import append_changes, merge_changes
         from qwery_spark.lake.table import open_lake
 
@@ -1191,10 +1183,8 @@ class ScriptEngine:
             F.lit("D").alias("op"),
             F.lit(ordinal).cast("bigint").alias("ordinal"),
         )
-        if tbl.snapshot().write_mode == "mor":
-            stats = append_changes(self.spark, tbl, batch)
-        else:
-            stats = merge_changes(self.spark, tbl, lww_dedup(batch, key=key_col))
+        write = append_changes if tbl.snapshot().write_mode == "mor" else merge_changes
+        stats = write(self.spark, tbl, batch)
         return self.spark.createDataFrame(
             [(stats.rows_deleted, stats.rows_stale)],
             "ROWS_DELETED long, ROWS_STALE long",

@@ -752,10 +752,10 @@ def replicate(
     the range spans — and the per-key LWW makes coarse and granular
     feeds converge to the same replica state anyway (a key that
     appeared and disappeared entirely inside the range leaves no
-    visible state either way). A MOR destination takes the raw window
-    events: the in-batch LWW happens in append_changes' one bucket
-    shuffle. A COW destination first reduces them to per-key winners,
-    since merge_changes takes one row per key. Deletes become 'D' events carrying the
+    visible state either way). The raw window events go straight to
+    the replica's keyed write — append_changes (MOR) or merge_changes
+    (COW) — whose one bucket shuffle resolves the in-batch LWW; no
+    per-key reduction runs first. Deletes become 'D' events carrying the
     tombstone's ordinal, so the replica's straggler guard keeps working
     across replication boundaries. Incremental feeds applied in order
     and a single full-range feed produce the same replica.
@@ -795,22 +795,5 @@ def replicate(
     # --auto-compact-files bounds their count), COW rewrites buckets
     from qwery_spark.lake.merge import append_changes, merge_changes
 
-    if dst.snapshot().write_mode == "mor":
-        return append_changes(spark, dst, events, epoch_id=epoch_id)
-    winners = (
-        events.groupBy(key)
-        .agg(
-            F.max_by(
-                F.struct(*[F.col(f"`{c}`") for c in payload], F.col("op")),
-                F.col("ordinal"),
-            ).alias("w"),
-            F.max("ordinal").alias("ordinal"),
-        )
-        .select(
-            key,
-            *[F.col(f"w.`{c}`").alias(c) for c in payload],
-            F.col("w.op").alias("op"),
-            "ordinal",
-        )
-    )
-    return merge_changes(spark, dst, winners, epoch_id=epoch_id)
+    write = append_changes if dst.snapshot().write_mode == "mor" else merge_changes
+    return write(spark, dst, events, epoch_id=epoch_id)

@@ -6,37 +6,42 @@ duplicate key UPDATE, i.e. the last writer in stream order wins) and
 of its matched-only UPDATE (core:ops/sql/Update.scala:19-44). A whole
 micro-batch is applied at once, with the guard of
 
-  MERGE INTO target t USING deduped_batch s ON t.doc_id = s.doc_id
+  MERGE INTO target t USING batch s ON t.doc_id = s.doc_id
     WHEN MATCHED AND s.ordinal > t.last_ordinal AND s.op='D'
          THEN tombstone
     WHEN MATCHED AND s.ordinal > t.last_ordinal THEN UPDATE payload
     WHEN NOT MATCHED THEN INSERT (or tombstone for a delete of an
          unseen key — keeps the cross-batch LWW guard airtight)
 
-Two write paths:
+where, per key, only the batch's last writer (max ordinal) takes part.
+Both write paths take the validated raw events, any number per key, and
+resolve that in-batch LWW inside their one ``_bucket`` shuffle.
 
   * ``append_changes`` (merge-on-read): one shuffle on the bucket,
-    LWW-dedup per key, append the winners as delta files. No target
-    read; reads resolve the deltas by max ordinal until ``compact``.
+    LWW per key, append the winners as delta files. No target read;
+    reads resolve the deltas by max ordinal until ``compact``.
   * ``merge_changes`` (copy-on-write): rewrite exactly the buckets the
     batch touches, in one of two arms —
       - **lww** (default): union the touched buckets' rows with the
         batch shaped as delta rows and keep the max-(ordinal,
         target-wins-ties) row per key in one bucket shuffle, no join.
-        On an empty target the batch (one row per key) is written as
-        is, with no target read and no aggregate.
+        On an empty target the batch's per-key winners (the append
+        path's rows) are written, with no target read.
       - **broadcast**: when the manifest row counts of the touched
-        buckets exceed ``LWW_MAX_TARGET_ROWS`` and the cached batch
-        fits ``BROADCAST_MAX_ROWS`` / ``BROADCAST_MAX_BYTES``, a
-        broadcast left join keeps the big target side from shuffling,
-        and a broadcast anti join adds the inserts.
+        buckets exceed ``LWW_MAX_TARGET_ROWS`` and the cached raw batch
+        fits ``BROADCAST_MAX_ROWS`` / ``BROADCAST_MAX_BYTES``, the batch
+        is reduced to its per-key winners once (cached), a broadcast
+        left join of them keeps the big target side from shuffling, and
+        a broadcast anti join adds the inserts.
     The arm that ran is recorded as ``merge_arm`` in the commit summary.
 
-Scale properties: the batch is key-unique (see cdc.dedup), so no key is
-skewed; only touched buckets are read and rewritten (at 4096 buckets a
-batch touching 1% of the keyspace rewrites ~41 buckets); stale events
-(ordinal <= last_ordinal) lose to the stored row and tombstones block
-resurrection; commits are epoch-keyed, so re-delivery is a no-op.
+Scale properties: only touched buckets are read and rewritten (at 4096
+buckets a batch touching 1% of the keyspace rewrites ~41 buckets);
+stale events (ordinal <= last_ordinal) lose to the stored row and
+tombstones block resurrection; commits are epoch-keyed, so re-delivery
+is a no-op. Skew: a hot key's events reach its bucket task with no
+map-side partial combine (the bucket repartition precedes the
+aggregate), on both paths.
 
 On a real cluster this file collapses to an Iceberg
 ``MERGE INTO ... WHEN MATCHED AND s.ordinal > t.last_ordinal ...``
@@ -158,6 +163,17 @@ def _lww(rows: DataFrame, key: str, order, *aggs) -> DataFrame:
         *[F.col(f"w.`{c}`").alias(c) for c in carry],
         F.col("_bucket"),
         *[c for c in w.columns if c not in (key, "_bucket", "w")],
+    )
+
+
+def _winners(src: DataFrame, key: str, payload: list[dict], n_buckets: int) -> DataFrame:
+    """An aligned raw batch reduced to its per-key last writers, as
+    delta rows: one repartition on ``_bucket`` (the write layout), then
+    the max-ordinal row per key inside it."""
+    return _lww(
+        _delta_rows(src, key, payload).repartition(n_buckets, "_bucket"),
+        key,
+        F.col("last_ordinal"),
     )
 
 
@@ -432,10 +448,9 @@ def append_changes(
             )
         )
     else:
-        deltas = _delta_rows(src, key, _payload(snap))
-        rows = _lww(
-            deltas.repartition(snap.n_buckets, "_bucket"), key, F.col("last_ordinal")
-        ).withColumn("_act", _write_act())
+        rows = _winners(src, key, _payload(snap), snap.n_buckets).withColumn(
+            "_act", _write_act()
+        )
     return _write_commit(
         table, snap, rows, epoch_id, collect_stats, max_records_per_file,
         "append-delta",
@@ -644,23 +659,23 @@ def _merge_lww(
     guard, and a delete of an unseen key wins unopposed as a tombstone.
 
     ``touched=None`` is the empty target (initial view build, first
-    window into a fresh table): the key-unique batch is written as is —
-    no target read, no aggregate.
+    window into a fresh table): the batch's per-key winners are written
+    as the append path writes them — no target read.
 
     ``insert_missing=False`` (UPDATE) keeps only keys with a live target
     row: a tombstone outranks the batch, and keys the target lacks are
     dropped."""
     key = snap.m["key_col"]
     payload = _payload(snap)
-    s_rows = _delta_rows(src, key, payload)
     if touched is None:
-        rows = s_rows.repartition(snap.n_buckets, "_bucket").withColumn(
+        rows = _winners(src, key, payload, snap.n_buckets).withColumn(
             "_act", _write_act()
         )
         return _write_commit(
             table, snap, rows, epoch_id, collect_stats, max_records_per_file,
             "merge", merge_arm="lww",
         )
+    s_rows = _delta_rows(src, key, payload)
     t_rows = table.read_physical(spark, buckets=touched).select(
         F.col(key),
         *[F.col(f"`{f['name']}`") for f in payload],
@@ -708,44 +723,45 @@ def _merge_broadcast(
     max_records_per_file: int,
 ) -> MergeStats:
     """The big-target COW merge: the touched target side NEVER shuffles
-    and is scanned exactly ONCE. One broadcast left join of the target
-    against the cached batch applies the guard to matched rows and tags
-    them with the matched batch key (``_mk``); it is persisted and
-    eagerly materialized, so both the write and the matched-keys
-    derivation read cached blocks, never the parquet again
-    (plan-asserted in tests/test_plans.py). Batch keys absent from the
-    target become inserts through a broadcast anti join; their bucket
-    repartition is the only shuffle. persist, NOT localCheckpoint: on
-    executor loss cached partitions recompute from the parquet lineage
-    (a checkpoint would truncate it and fail the merge permanently)."""
+    and is scanned exactly ONCE. The batch is reduced to its per-key
+    winners once (persisted). One broadcast left join of the target
+    against them applies the guard to matched rows and tags them with
+    the matched batch key (``_mk``); it is persisted and eagerly
+    materialized, so both the write and the matched-keys derivation
+    read cached blocks, never the parquet again (plan-asserted in
+    tests/test_plans.py). Winners absent from the target become inserts
+    through a broadcast anti join; already bucket-partitioned, they add
+    no shuffle of their own. persist, NOT localCheckpoint: on executor
+    loss cached partitions recompute from the parquet lineage (a
+    checkpoint would truncate it and fail the merge permanently)."""
     key = snap.m["key_col"]
     payload = _payload(snap)
+    won = _winners(src, key, payload, snap.n_buckets).persist()
     tgt = table.read_physical(spark, buckets=touched).withColumn(
         "_bucket", _bucket_of(key, snap.n_buckets)
     ).alias("t")
-    s = src.alias("s")
-    # null on unmatched target rows — when() then keeps the target row
-    apply_change = F.col("s.ordinal") > F.col("t.last_ordinal")
-    is_delete = F.col("s.op") == "D"
+    s = won.alias("s")
+    # null on unmatched target rows — when() then keeps the target row;
+    # a winning tombstone already carries a null payload
+    apply_change = F.col("s.last_ordinal") > F.col("t.last_ordinal")
     merged = tgt.join(
         F.broadcast(s), F.col(f"t.`{key}`") == F.col(f"s.`{key}`"), "left"
     ).select(
         F.col(f"t.`{key}`").alias(key),
         *[
-            F.when(apply_change & is_delete, F.lit(None).cast(f["type"]))
-            .when(apply_change, F.col(f"s.`{f['name']}`"))
+            F.when(apply_change, F.col(f"s.`{f['name']}`"))
             .otherwise(F.col(f"t.`{f['name']}`"))
             .alias(f["name"])
             for f in payload
         ],
-        F.when(apply_change, F.col("s.ordinal"))
-        .otherwise(F.col("t.last_ordinal"))
-        .alias("last_ordinal"),
-        F.when(apply_change, is_delete).otherwise(F.col("t._deleted")).alias("_deleted"),
+        *[
+            F.when(apply_change, F.col(f"s.{c}")).otherwise(F.col(f"t.{c}")).alias(c)
+            for c in ENGINE_COLS
+        ],
         F.col("t._bucket").alias("_bucket"),
-        F.when(apply_change & is_delete, "del")
+        F.when(apply_change & F.col("s._deleted"), "del")
         .when(apply_change, "up")
-        .when(F.col("s.ordinal").isNotNull(), "stale")
+        .when(F.col("s.last_ordinal").isNotNull(), "stale")
         .alias("_act"),
         F.col(f"s.`{key}`").alias("_mk"),
     ).persist()
@@ -754,12 +770,8 @@ def _merge_broadcast(
         matched_keys = merged.filter(F.col("_mk").isNotNull()).select(
             F.col("_mk").alias(key)
         )
-        inserts = (
-            _delta_rows(
-                src.join(F.broadcast(matched_keys), key, "left_anti"), key, payload
-            )
-            .withColumn("_act", _write_act())
-            .repartition(max(min(len(touched), 64), 1), "_bucket")
+        inserts = won.join(F.broadcast(matched_keys), key, "left_anti").withColumn(
+            "_act", _write_act()
         )
         # matched rows are target-scan-local and inserts bucket-
         # partitioned: written as is (partitionBy routes the bucket dirs)
@@ -770,6 +782,7 @@ def _merge_broadcast(
         )
     finally:
         merged.unpersist()
+        won.unpersist()
 
 
 def merge_changes(
@@ -781,11 +794,15 @@ def merge_changes(
     max_records_per_file: int = 2_000_000,
     insert_missing: bool = True,
 ) -> MergeStats:
-    """Apply a key-unique change batch to the table (copy-on-write).
+    """Apply a change batch to the table (copy-on-write).
 
-    ``batch`` contract: exactly one row per key (pre-deduped LWW winner)
-    with columns (doc_id, op in {'U','D'}, ordinal bigint, <user payload
-    columns>). Missing user columns (e.g. just added via DDL) null-fill.
+    ``batch`` contract, the same as append_changes': the validated raw
+    events, any number per key, with columns (<key>, op in {'I','U','D'},
+    ordinal bigint, <user payload columns>); the max-ordinal event per
+    key is the batch's last writer, resolved in the merge's one bucket
+    shuffle. Missing user columns (e.g. just added via DDL) null-fill.
+    Skew profile: the MOR append's — a hot key's events reach its
+    bucket task with no map-side partial combine.
 
     insert_missing=False gives UPDATE ... KEYED ON semantics: only keys
     with a live target row change; other batch rows are no-ops
@@ -795,8 +812,10 @@ def merge_changes(
     unless the manifest row counts of the touched buckets exceed
     LWW_MAX_TARGET_ROWS (or are unknown) and the cached batch fits
     BROADCAST_MAX_ROWS and BROADCAST_MAX_BYTES — then ``broadcast``.
-    UPDATE always takes ``lww``. An empty target skips the batch cache
-    and the touched-bucket count: its merge is one write job.
+    The gate counts the raw batch's rows and bytes, never fewer than its
+    winners', so it errs toward lww. UPDATE always takes ``lww``. An
+    empty target skips the batch cache and the touched-bucket count: its
+    merge is one write job.
     """
     snap = table.snapshot()
     if epoch_id is not None and epoch_id in snap.applied_epochs:

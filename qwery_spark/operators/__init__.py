@@ -18,7 +18,7 @@ from qwery_spark.operators.similarity import (  # noqa: F401
     lsh_bucket,
     lsh_topk,
 )
-from qwery_spark.operators.asof import asof_join, asof_join_pandas  # noqa: F401
+from qwery_spark.operators.asof import asof_join  # noqa: F401
 from qwery_spark.operators.text import (  # noqa: F401
     token_stats,
     quality_score,

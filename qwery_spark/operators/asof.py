@@ -2,19 +2,12 @@
 reference has only inner join; as-of is the standard time-series
 enrichment the training-data world needs for event/state alignment).
 
-Two strategies:
-
-  * ``asof_join`` (default): pure-DataFrame union+window formulation —
-    tag both sides, sort by (key, time, side) with a single window pass
-    carrying the last-seen right payload forward. ONE shuffle on the
-    key, no join explosion, whole-stage codegen. Scales like any window:
-    per-key data must fit a task's sort spill budget (fine for
-    time-series keys; pathological single-key streams would salt by
-    time range first).
-
-  * ``asof_join_pandas``: cogrouped applyInPandas with pd.merge_asof per
-    key group — Arrow-batched, for semantics the window can't express
-    (nearest rather than backward, tolerance windows).
+``asof_join`` is a pure-DataFrame union+window formulation: tag both
+sides, sort by (key, time, side) with a single window pass carrying the
+last-seen right payload forward. ONE shuffle on the key, no join
+explosion, whole-stage codegen. Scales like any window: per-key data
+must fit a task's sort spill budget (fine for time-series keys;
+pathological single-key streams would salt by time range first).
 """
 
 from __future__ import annotations
@@ -67,44 +60,3 @@ def asof_join(
         ],
     )
     return carried.filter(F.col("_side") == 1).drop("_side")
-
-
-def asof_join_pandas(
-    left: DataFrame,
-    right: DataFrame,
-    key: str,
-    time_col: str,
-    direction: str = "backward",
-    tolerance=None,
-) -> DataFrame:
-    """Cogrouped-pandas as-of (pd.merge_asof per key group): supports
-    'backward'/'forward'/'nearest' and tolerance. Arrow-batched; use when
-    the window formulation's backward-only semantics aren't enough."""
-    import pandas as pd
-
-    right_payload = [c for c in right.columns if c not in (key, time_col)]
-    out_schema = ", ".join(
-        [f"`{f.name}` {f.dataType.simpleString()}" for f in left.schema.fields]
-        + [
-            f"`right_{f.name}` {f.dataType.simpleString()}"
-            for f in right.schema.fields
-            if f.name in right_payload
-        ]
-    )
-
-    def merge(lg: pd.DataFrame, rg: pd.DataFrame) -> pd.DataFrame:
-        lg = lg.sort_values(time_col)
-        rg = rg.sort_values(time_col)[[time_col] + right_payload].rename(
-            columns={c: f"right_{c}" for c in right_payload}
-        )
-        if rg.empty:
-            for c in right_payload:
-                lg[f"right_{c}"] = None
-            return lg
-        return pd.merge_asof(
-            lg, rg, on=time_col, direction=direction, tolerance=tolerance
-        )
-
-    return left.groupBy(key).cogroup(right.groupBy(key)).applyInPandas(
-        lambda lg, rg: merge(lg, rg), schema=out_schema
-    )

@@ -295,7 +295,6 @@ def run_stream(
     quarantine_dir: str | None = None,
     max_files_per_trigger: int = 1,
     available_now: bool = True,
-    validation: str = "builtin",
     collect_stats: bool = True,
     compact_every: int | None = None,
     compaction_policy=None,
@@ -360,7 +359,6 @@ def run_stream(
                 target,
                 df,
                 epoch_id=epoch_id,
-                validation=validation,
                 quarantine_dir=quarantine_dir,
                 lineage_dir=lineage_dir,
                 collect_stats=collect_stats,

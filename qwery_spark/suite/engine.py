@@ -76,8 +76,8 @@ def _derived_events(spark, sf_dir):
     WHERE rn = 1 AND event_type <> 'error'
     """,
     doc="THE engine end-to-end: 4-micro-batch replay into a fresh lake "
-    "table (validation+quarantine -> LWW dedup -> epoch-keyed MERGE with "
-    "tombstones), final state vs a pure-SQL LWW oracle. Token arrays "
+    "table (validation+quarantine -> epoch-keyed MERGE with in-batch LWW "
+    "and tombstones), final state vs a pure-SQL LWW oracle. Token arrays "
     "verified via md5(join(tokens)).",
 )
 def cdc_engine_replay(spark, sf_dir):

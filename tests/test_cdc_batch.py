@@ -148,17 +148,26 @@ def test_bucket_pruning_rewrites_only_touched_buckets(spark, tmp_table_dir):
     assert len(changed_buckets) == 1, "only one bucket may be rewritten"
 
 
-def test_validation_arrow_matches_builtin(spark, tmp_table_dir):
+def test_validation_builtin_matches_oracle(spark):
+    """The engine's validation agrees row by row with the replay
+    oracle's independent per-row check on a generated batch."""
+    from qwery_spark.cdc.oracle import _valid
     from qwery_spark.cdc.validate import with_reject_reason
+    from qwery_spark.schema import VOCAB_SIZE
 
-    events = make_events(4000, seed=21)
-    df = spark.createDataFrame(events.to_pandas(), schema=EVENT_SCHEMA)
-    a = with_reject_reason(df, mode="builtin").select("ordinal", "reject_reason")
-    b = with_reject_reason(df, mode="arrow").select("ordinal", "reject_reason")
-    pa_ = a.toPandas().sort_values("ordinal").reset_index(drop=True)
-    pb = b.toPandas().sort_values("ordinal").reset_index(drop=True)
-    assert pa_.equals(pb)
-    assert pa_["reject_reason"].notna().sum() > 0
+    pdf = make_events(4000, seed=21).to_pandas().sort_values("ordinal")
+    df = spark.createDataFrame(pdf, schema=EVENT_SCHEMA)
+    got = (
+        with_reject_reason(df).select("ordinal", "reject_reason")
+        .toPandas().sort_values("ordinal")
+    )
+    want = [
+        _valid(r.op, r.doc_id, r.tokens, r.n_tok, VOCAB_SIZE)
+        for r in pdf.itertuples(index=False)
+    ]
+    assert list(got["ordinal"]) == list(pdf["ordinal"])
+    assert list(got["reject_reason"]) == want
+    assert sum(w is not None for w in want) > 0
 
 
 @pytest.mark.parametrize(
@@ -191,6 +200,8 @@ def test_merge_arm_matches_oracle(spark, tmp_table_dir, monkeypatch, arm, gates)
     ]
     assert (late["op"] == "D").any()
     for i, ev in enumerate(epochs):
+        # raw batches, keys repeated: the merge resolves in-batch LWW
+        assert ev["doc_id"].dropna().duplicated().any()
         res = apply_changes(
             spark, tbl, spark.createDataFrame(ev, schema=EVENT_SCHEMA), epoch_id=i
         )

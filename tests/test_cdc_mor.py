@@ -85,7 +85,6 @@ def test_mor_duplicate_epoch_idempotent(spark, tmp_table_dir):
 def test_mor_then_cow_merge_on_same_table(spark, tmp_table_dir):
     """A COW-style merge on a table carrying unresolved MOR deltas must
     read the RESOLVED target (read_physical resolves per bucket)."""
-    from qwery_spark.cdc.dedup import lww_dedup
     from qwery_spark.cdc.validate import split_valid
     from qwery_spark.lake.merge import merge_changes
     from pyspark.sql import functions as F
@@ -96,8 +95,7 @@ def test_mor_then_cow_merge_on_same_table(spark, tmp_table_dir):
     more = make_events(1000, seed=53, start_ordinal=3000)
     df = _df(spark, more)
     valid, _ = split_valid(df.filter(F.col("op") != "DDL").drop("ddl"))
-    deduped = lww_dedup(valid)
-    merge_changes(spark, tbl, deduped, epoch_id=1)  # explicit COW pass
+    merge_changes(spark, tbl, valid, epoch_id=1)  # explicit COW pass
     import pyarrow as pa
 
     assert_state_equals_oracle(spark, tbl, pa.concat_tables([events, more]).to_pandas())

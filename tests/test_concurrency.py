@@ -233,7 +233,7 @@ def test_merge_changes_retry_is_transparent_at_api_level(spark, tmp_table_dir):
                   ordinal_base=250_000)
     # monkey-free staleness: call commit path through merge_changes with
     # a table object whose snapshot was cached pre-interleave
-    stats = merge_changes(spark, tbl, lww_dedup(valid), epoch_id=8)
+    stats = merge_changes(spark, tbl, valid, epoch_id=8)
     assert stats.rows_upserted + stats.rows_deleted > 0
     assert tbl.snapshot().version == base.version + 2
 

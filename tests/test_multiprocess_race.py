@@ -385,7 +385,6 @@ def _wap_ingest_worker(path: str, done_flag: str, err_file: str, wap_json: str):
             f.write("done")
 
 
-@pytest.mark.timeout(900)
 def test_wap_publish_races_compaction_daemon(spark, tmp_table_dir):
     """WAP ingest (branch stage -> audit -> fast-forward) in one OS
     process vs the compaction-policy daemon in another: every epoch

@@ -78,8 +78,8 @@ def _spy_write_plans(monkeypatch) -> list:
 
 
 def _keyed_batch(spark, keys, ordinal: int):
-    """A key-unique change batch (the merge_changes contract) built from
-    local rows, so its plan carries no aggregate or exchange of its own."""
+    """A key-unique change batch built from local rows, so its plan
+    carries no aggregate or exchange of its own."""
     return spark.createDataFrame(
         [(f"k{i}", "U", ordinal, [i], 1, "web") for i in keys],
         "doc_id string, op string, ordinal bigint, tokens array<int>, "
@@ -116,11 +116,30 @@ def test_lww_dedup_partial_aggregates(spark):
     assert "partial_max_by" in p, p
 
 
+def _subtrees(plan: str, node: str):
+    """Each plan line naming ``node``, with the lines of its subtree
+    (the following lines indented deeper than it)."""
+    lines = plan.splitlines()
+
+    def depth(line):
+        return len(line) - len(line.lstrip(" :+-"))
+
+    for i, line in enumerate(lines):
+        if node in line:
+            sub = []
+            for below in lines[i + 1:]:
+                if depth(below) <= depth(line):
+                    break
+                sub.append(below)
+            yield line, sub
+
+
 def test_broadcast_merge_no_target_shuffle(spark, tmp_table_dir, monkeypatch):
     """The broadcast merge's write plan: the target side reaches the
-    write without any hash-partitioning exchange — the one exchange is
-    the small inserts' bucket repartition. The load before it, into an
-    empty table, is one plain write: no aggregate, no cached relation."""
+    write without any hash-partitioning exchange — every hash exchange
+    is the batch winners' bucket shuffle, and none has the target's
+    parquet scan beneath it. The load before it, into an empty table,
+    is one bucket shuffle (its in-shuffle LWW) with no cached relation."""
     import qwery_spark.lake.merge as M
     from qwery_spark.lake.table import LakeTable
     from qwery_spark.schema import TARGET_SCHEMA
@@ -129,15 +148,44 @@ def test_broadcast_merge_no_target_shuffle(spark, tmp_table_dir, monkeypatch):
     monkeypatch.setattr(M, "LWW_MAX_TARGET_ROWS", 0)
     tbl = LakeTable.create(tmp_table_dir + "/t", TARGET_SCHEMA, n_buckets=8)
     M.merge_changes(spark, tbl, _keyed_batch(spark, range(2000), 1), epoch_id=0)
-    assert "Aggregate" not in plans[-1] and "InMemoryRelation" not in plans[-1]
+    assert plans[-1].count("Exchange") == 1, plans[-1]
+    assert "Exchange hashpartitioning(_bucket" in plans[-1]
+    assert "InMemoryRelation" not in plans[-1]
     st = M.merge_changes(spark, tbl, _keyed_batch(spark, range(1500, 2500), 2),
                          epoch_id=1)
     assert st.summary["merge_arm"] == "broadcast"
     assert st.rows_upserted == 1000
     plan = plans[-1]
     assert "BroadcastHashJoin" in plan and "LeftOuter" in plan
-    assert plan.count("Exchange hashpartitioning") == 1, plan
-    assert "Exchange hashpartitioning(_bucket" in plan
+    hashed = list(_subtrees(plan, "Exchange hashpartitioning"))
+    assert hashed, plan
+    for line, sub in hashed:
+        assert "Exchange hashpartitioning(_bucket" in line, line
+        assert not any("FileScan" in below for below in sub), plan
+
+
+def test_cow_apply_is_single_bucket_shuffle(spark, tmp_table_dir, monkeypatch):
+    """A COW apply_changes epoch hands its raw batch — keys repeated —
+    to merge_changes, which resolves the in-batch LWW inside its own
+    bucket shuffle: the write plan holds exactly ONE exchange, on
+    _bucket, into an empty target and into a non-empty one (no per-key
+    shuffle of the batch before it)."""
+    from qwery_spark.cdc.apply import apply_changes
+    from qwery_spark.datagen import make_events
+    from qwery_spark.lake.table import LakeTable
+    from qwery_spark.schema import EVENT_SCHEMA, TARGET_SCHEMA
+
+    plans = _spy_write_plans(monkeypatch)
+    tbl = LakeTable.create(tmp_table_dir + "/t", TARGET_SCHEMA, n_buckets=8)
+    batches = [make_events(2000, seed=3), make_events(500, seed=5, start_ordinal=2000)]
+    for epoch, ev in enumerate(batches):
+        pdf = ev.to_pandas()
+        assert pdf["doc_id"].dropna().duplicated().any()
+        res = apply_changes(spark, tbl, spark.createDataFrame(pdf, schema=EVENT_SCHEMA),
+                            epoch_id=epoch)
+        assert res.merge.summary["merge_arm"] == "lww"
+        assert plans[-1].count("Exchange") == 1, (epoch, plans[-1])
+        assert "Exchange hashpartitioning(_bucket" in plans[-1]
 
 
 def test_broadcast_merge_single_target_scan(spark, tmp_table_dir, monkeypatch):

@@ -1,9 +1,7 @@
-"""Builtin (Catalyst) vs arrow (pandas_udf) validation equality — the
-two modes are documented as interchangeable, so they must agree row by
-row on every edge: null doc_id, null tokens, null n_tok with a non-null
-payload (the three-valued-logic trap), null token elements, empty
-arrays, and out-of-range values. The replay oracle's _valid is the
-third, independent vote."""
+"""Validation reasons on every edge: null doc_id, null tokens, null
+n_tok with a non-null payload (the three-valued-logic trap), null token
+elements, empty arrays, and out-of-range values. The replay oracle's
+_valid is the independent vote."""
 
 import pandas as pd
 import pytest
@@ -52,22 +50,13 @@ def case_df(spark):
     return spark.createDataFrame(rows, schema=SCHEMA)
 
 
-@pytest.mark.parametrize("mode", ["builtin", "arrow"])
-def test_mode_matches_expected(case_df, mode):
+def test_reasons_match_expected(case_df):
     got = {
         r["i"]: r[REASON_COL]
-        for r in with_reject_reason(case_df, mode=mode, vocab=VOCAB).collect()
+        for r in with_reject_reason(case_df, vocab=VOCAB).collect()
     }
     for i, (_, _, _, _, want) in enumerate(CASES):
-        assert got[i] == want, f"{mode} case {i}: got {got[i]!r}, want {want!r}"
-
-
-def test_builtin_equals_arrow(case_df):
-    b = with_reject_reason(case_df, mode="builtin", vocab=VOCAB)
-    a = with_reject_reason(case_df, mode="arrow", vocab=VOCAB)
-    bb = {r["i"]: r[REASON_COL] for r in b.collect()}
-    aa = {r["i"]: r[REASON_COL] for r in a.collect()}
-    assert bb == aa
+        assert got[i] == want, f"case {i}: got {got[i]!r}, want {want!r}"
 
 
 def test_oracle_agrees_on_non_null_element_cases():
@@ -78,14 +67,14 @@ def test_oracle_agrees_on_non_null_element_cases():
 
 
 def test_null_ntok_row_is_quarantined_not_merged(spark):
-    """End-to-end: the round-1 escape (builtin passed NULL-n_tok rows into
-    the merge while arrow/oracle rejected them) must be closed."""
+    """End-to-end: the round-1 escape (validation passed NULL-n_tok rows
+    into the merge while the oracle rejected them) must be closed."""
     from qwery_spark.cdc.validate import split_valid
 
     df = spark.createDataFrame(
         [("I", "doc-x", [1, 2, 3], None, 0)], schema=SCHEMA
     )
-    valid, rejected = split_valid(df, mode="builtin", vocab=VOCAB)
+    valid, rejected = split_valid(df, vocab=VOCAB)
     assert valid.count() == 0
     rej = rejected.collect()
     assert len(rej) == 1 and rej[0][REASON_COL] == "n_tok_mismatch"
