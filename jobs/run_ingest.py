@@ -12,6 +12,13 @@ On a cluster, executor count/size come from spark-submit flags
 (--num-executors etc.); this script carries NO local-mode assumptions —
 it uses the ambient SparkSession. Build the zip with jobs/package.sh.
 
+The job is a CLI over ``qwery_spark.streaming.stream.run_stream``, the
+one micro-batch loop: it parses arguments, creates the table
+(--create), builds the seek and the kafka source, makes one run_stream
+call, waits on its query and compacts after a drain (--compact-after).
+With --audit-sql, each write-audit-publish decision is one
+``{"wap": ...}`` JSON line on stderr, written as the batch decides.
+
 The same job runs at N and 4N executors for the scaling criterion;
 lineage rows (per-epoch offsets, counts, snapshot ids, wall ms) land in
 --lineage for throughput accounting.
@@ -20,7 +27,7 @@ lineage rows (per-epoch offsets, counts, snapshot ids, wall ms) land in
 from __future__ import annotations
 
 import argparse
-import json
+import logging
 import sys
 
 
@@ -72,11 +79,24 @@ def main(argv=None):
 
     spark = SparkSession.builder.appName("qwery-cdc-ingest").getOrCreate()
 
-    from qwery_spark.cdc.apply import apply_changes
     from qwery_spark.lake.merge import compact
     from qwery_spark.lake.table import LakeTable
     from qwery_spark.schema import TARGET_SCHEMA
-    from qwery_spark.streaming.stream import parse_kafka_events, stream_events
+    from qwery_spark.streaming.stream import (
+        parse_kafka_events,
+        resume_ordinal,
+        run_stream,
+        starting_offsets_from_lineage,
+        stream_events,
+    )
+
+    # WAP decisions: one {"wap": ...} JSON line on stderr per batch
+    wap_log = logging.getLogger("qwery_spark.streaming.stream")
+    if not wap_log.handlers:
+        handler = logging.StreamHandler(sys.stderr)
+        handler.setFormatter(logging.Formatter("%(message)s"))
+        wap_log.addHandler(handler)
+        wap_log.setLevel(logging.INFO)
 
     if args.create:
         try:
@@ -86,9 +106,8 @@ def main(argv=None):
                              write_mode=args.mode)
     table = LakeTable(args.table)
 
+    min_ord = None
     if args.kafka:
-        from qwery_spark.streaming.stream import starting_offsets_from_lineage
-
         offsets = args.starting_offsets
         if args.resume_from_lineage and args.lineage and offsets is None:
             offsets = starting_offsets_from_lineage(
@@ -101,61 +120,23 @@ def main(argv=None):
         }, starting_offsets=offsets or "earliest")
         events = parse_kafka_events(raw)
     else:
-        from qwery_spark.streaming.stream import resume_ordinal
-
+        events = args.events
         min_ord = args.from_ordinal
         if args.resume_from_lineage and args.lineage and min_ord is None:
             min_ord = resume_ordinal(spark, args.lineage)
-        events = stream_events(spark, args.events,
-                               max_files_per_trigger=args.max_files_per_trigger,
-                               min_ordinal=min_ord)
 
-    # exactly-once token namespaced by the persisted query id (fresh
-    # checkpoints restart batch ids at 0 — bare epoch ids would collide
-    # with a previous run's applied epochs and silently skip batches);
-    # resolved inside the batch, once the checkpoint metadata exists
-    from qwery_spark.streaming.stream import run_id_for_checkpoint
-
-    _rid = {}
-
-    from qwery_spark.streaming.stream import _wap_batch
-
-    def _batch(df, epoch_id):
-        if "v" not in _rid:
-            _rid["v"] = run_id_for_checkpoint(args.checkpoint)
-        if args.transform_sql:
-            df.createOrReplaceTempView("events")
-            df = df.sparkSession.sql(args.transform_sql)
-
-        def _apply(target):
-            return apply_changes(
-                spark, target, df, epoch_id=epoch_id,
-                lineage_dir=args.lineage, quarantine_dir=args.quarantine,
-                run_id=_rid["v"],
-            )
-
-        if args.audit_sql:
-            wap_log: list = []
-            _wap_batch(
-                spark, table, _apply, args.audit_sql, _rid["v"], epoch_id,
-                df, args.rejected_dir, wap_log,
-            )
-            for w in wap_log:
-                print(json.dumps({"wap": w}), file=sys.stderr)
-        else:
-            _apply(table)
-
-    writer = events.writeStream.foreachBatch(_batch).option(
-        "checkpointLocation", args.checkpoint
+    run = run_stream(
+        spark, table, events, args.checkpoint,
+        lineage_dir=args.lineage, quarantine_dir=args.quarantine,
+        max_files_per_trigger=args.max_files_per_trigger,
+        continuous=args.continuous, transform_sql=args.transform_sql,
+        min_ordinal=min_ord, audit_sql=args.audit_sql,
+        rejected_dir=args.rejected_dir,
     )
-    if args.continuous:
-        q = writer.trigger(processingTime=args.continuous).start()
-        q.awaitTermination()
-    else:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-        if args.compact_after and table.snapshot().write_mode == "mor":
-            compact(spark, table)
+    run.query.awaitTermination()
+    if (not args.continuous and args.compact_after
+            and table.snapshot().write_mode == "mor"):
+        compact(spark, table)
     return 0
 
 

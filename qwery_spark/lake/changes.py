@@ -70,14 +70,16 @@ PREIMAGE_ORDINAL_COL = "_preimage_ordinal"
 #      session.get_spark pins inFilterThreshold to the same bound so an
 #      over-limit list can never reach parquet as an exact In anyway.
 #   2. payoff: the win shrinks as the key count grows (2.4x at 8M rows
-#      x100 keys, 1.1-1.34x at x1000 — tools/keyprune_bench.py); past
+#      x100 keys, 1.1-1.34x at x1000 — BASELINE.md "Round-5: changelog
+#      diff pruning"); past
 #      a few hundred keys the row-group hit set approaches the file
 #      set and hull pruning already covers it.
 # Over-limit windows degrade to hull-only pruning — never crash.
 _KEY_SET_MAX_ROWS = 250
 # ...and only against a scan deep enough to repay the key-collect job's
 # fixed cost (~0.3-1 s): measured crossover is ~4M kept rows
-# (tools/keyprune_bench.py — 2.4x at 8M/100, a mild loss at 2M/1000).
+# (BASELINE.md "Round-5: changelog diff pruning" — 2.4x at 8M/100, a
+# mild loss at 2M/1000).
 # Both knobs are module-level so the soundness tests can force the
 # path on tiny tables.
 _KEY_SET_MIN_KEPT_ROWS = 4_000_000
@@ -234,7 +236,7 @@ def _diff_pruning(
     set are provably untouched (additive range) and emit nothing."""
     added = _added_files(table, before_version, after_version, path_cache)
     # the hull goes through the module-level name so pruning stays
-    # monkeypatch-disableable as one switch (tests, keyprune_bench)
+    # monkeypatch-disableable as one switch (tests, A/B arms)
     rng = _added_key_range(table, before_version, after_version, added)
     if rng is None or not added:
         return None, None

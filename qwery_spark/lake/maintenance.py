@@ -71,13 +71,13 @@ class CompactionPolicy:
     # BINPACK the due buckets (merge only files under this byte size —
     # write volume bounded by the delta tail, the multi-GB sorted base
     # files never rewritten; measured 179.7x less write volume,
-    # tools/binpack_bench.py) instead of whole-bucket compaction. A due
-    # bucket whose file count binpack cannot reduce (all files large)
-    # falls back to a full compact the same tick — the
-    # read-amplification bound stays a guarantee, not a hope. The
-    # cluster_every_commits cadence still runs the full sorted rewrite
-    # (binpack leaves buckets unresolved; the cadence restores read
-    # speed + clustering).
+    # BASELINE.md "Round-6: binpack partial compaction") instead of
+    # whole-bucket compaction. A due bucket whose file count binpack
+    # cannot reduce (all files large) falls back to a full compact the
+    # same tick — the read-amplification bound stays a guarantee, not a
+    # hope. The cluster_every_commits cadence still runs the full sorted
+    # rewrite (binpack leaves buckets unresolved; the cadence restores
+    # read speed + clustering).
     binpack_small_bytes: int | None = None
 
     def __post_init__(self):

@@ -880,7 +880,7 @@ def binpack(
     the SMALL-file volume — at 100 TB a bucket is one multi-GB sorted
     file plus a tail of per-epoch delta files, and rewriting the big
     file every maintenance tick is the single largest wasted-write
-    lever (measured: tools/binpack_bench.py).
+    lever (measured: BASELINE.md "Round-6: binpack partial compaction").
 
     Soundness: LWW resolution is an associative max_by per key, so
     resolving a SUBSET of a bucket's files produces subset-winners that

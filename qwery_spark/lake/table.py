@@ -583,7 +583,8 @@ class LakeTable:
             # hint; without it parquet-mr allocates its 1 MiB maximum
             # per row group — harmless at the default 128 MiB row
             # groups, pathological for small ones (measured 6x file
-            # bloat in tools/pointlookup_bench.py's layout).
+            # bloat in the layout of BASELINE.md "Parquet-native bloom
+            # filters").
             "bloom_filter_cols": list(bloom_filter_cols or ()),
             "bloom_ndv": bloom_ndv,
             # aggregating-payload (additive-MOR) columns — see

@@ -18,10 +18,17 @@ Exactly-once contract (two independent layers):
 
 Resume: restart with the same checkpointLocation; Spark skips batches
 whose offsets are committed and continues the epoch counter.
+
+``run_stream`` is the one micro-batch loop: the library call, the
+tests, the benchmark and the spark-submit job (``jobs/run_ingest.py``)
+all drive it. Write-audit-publish decisions go out through this
+module's logger as ``{"wap": …}`` JSON lines as each batch decides.
 """
 
 from __future__ import annotations
 
+import json
+import logging
 import os
 import time
 from dataclasses import dataclass, field
@@ -40,13 +47,19 @@ from qwery_spark.schema import EVENT_SCHEMA
 OFFSET_EARLIEST = -2
 OFFSET_LATEST = -1
 
+# StreamRun keeps only the last RUN_HISTORY entries of its per-epoch
+# lists: a --continuous run never ends, and each ApplyResult holds its
+# commit summary (up to n_buckets touched buckets). The lineage dir is
+# the complete per-epoch record.
+RUN_HISTORY = 100
+
+log = logging.getLogger(__name__)
+
 
 def offsets_json(topic: str, partition_offsets: dict[int, int]) -> str:
     """Build a Kafka ``startingOffsets`` JSON for random access by
     (offset, partition) — the reference's seek(offset, partition)
     surface (core:devices/KafkaInputDevice.scala:29-31)."""
-    import json
-
     return json.dumps({topic: {str(p): int(o) for p, o in partition_offsets.items()}})
 
 
@@ -191,14 +204,29 @@ def run_id_for_checkpoint(checkpoint_dir: str) -> str:
     a path hash only when no metadata exists yet (the file cannot be
     missing inside foreachBatch: Spark writes it before batch 0)."""
     import hashlib
-    import json as _json
-    import os as _os
 
     try:
-        with open(_os.path.join(checkpoint_dir, "metadata")) as fh:
-            return str(_json.load(fh)["id"])[:8]
+        with open(os.path.join(checkpoint_dir, "metadata")) as fh:
+            return str(json.load(fh)["id"])[:8]
     except Exception:
-        return hashlib.md5(_os.path.abspath(checkpoint_dir).encode()).hexdigest()[:8]
+        return hashlib.md5(os.path.abspath(checkpoint_dir).encode()).hexdigest()[:8]
+
+
+def _record(entries: list, entry) -> None:
+    """Append ``entry`` and trim ``entries`` in place to its last
+    RUN_HISTORY items (in place, not a deque: readers iterate these
+    lists while the batch thread appends)."""
+    entries.append(entry)
+    if len(entries) > RUN_HISTORY:
+        del entries[:-RUN_HISTORY]
+
+
+def _decide(wap_log: list, epoch_id: int, published: bool, violations: int,
+            skipped: bool) -> None:
+    w = {"epoch_id": epoch_id, "published": published,
+         "violations": violations, "skipped": skipped}
+    log.info(json.dumps({"wap": w}))
+    _record(wap_log, w)
 
 
 def _wap_batch(
@@ -232,10 +260,7 @@ def _wap_batch(
             # epoch already published by a previous attempt (or arrived
             # twice): the empty stage is dropped, main untouched
             table.drop_branch(bname)
-            wap_log.append({
-                "epoch_id": epoch_id, "published": True,
-                "violations": 0, "skipped": True,
-            })
+            _decide(wap_log, epoch_id, True, 0, True)
             return res
         br.read(spark).createOrReplaceTempView("staged")
         # the WINDOW's net diff (insert/update_postimage/delete rows vs
@@ -255,10 +280,7 @@ def _wap_batch(
                     os.path.join(rejected_dir, f"epoch={run_id}-{epoch_id}")
                 )
             table.drop_branch(bname)
-            wap_log.append({
-                "epoch_id": epoch_id, "published": False,
-                "violations": violations, "skipped": False,
-            })
+            _decide(wap_log, epoch_id, False, violations, False)
             return res
         try:
             table.publish_branch(bname)
@@ -268,10 +290,7 @@ def _wap_batch(
             # it against the new head and re-audit
             table.drop_branch(bname)
             continue
-        wap_log.append({
-            "epoch_id": epoch_id, "published": True,
-            "violations": 0, "skipped": False,
-        })
+        _decide(wap_log, epoch_id, True, 0, False)
         return res
     raise CommitConflict(
         f"WAP epoch {epoch_id}: lost the publish race {max_restages} times"
@@ -289,13 +308,12 @@ class StreamRun:
 def run_stream(
     spark: SparkSession,
     table: LakeTable,
-    events_dir: str,
+    events: str | DataFrame,
     checkpoint_dir: str,
     lineage_dir: str | None = None,
     quarantine_dir: str | None = None,
     max_files_per_trigger: int = 1,
-    available_now: bool = True,
-    collect_stats: bool = True,
+    continuous: str | None = None,
     compact_every: int | None = None,
     compaction_policy=None,
     transform_sql: str | None = None,
@@ -304,11 +322,21 @@ def run_stream(
     audit_sql: str | None = None,
     rejected_dir: str | None = None,
 ) -> StreamRun:
-    """Start the CDC ingest stream. With available_now=True the query
-    drains everything currently in events_dir and stops (the pattern for
-    scheduled/triggered runs — reference: ScheduledEvent daily runs,
-    etl:events/ScheduledEvent.scala:25-47); otherwise it runs
-    continuously per trigger.
+    """Start the CDC ingest stream: each micro-batch of ``events`` goes
+    through ``apply_changes`` into ``table`` under an exactly-once
+    epoch key namespaced by the checkpoint's query id.
+
+    ``events`` is an events directory (the file-source WAL tail, read
+    with ``max_files_per_trigger`` and the ``min_ordinal`` seek) or a
+    ready streaming DataFrame in the change-event schema, such as the
+    kafka tail from ``parse_kafka_events``, whose ``_partition`` column
+    yields per-partition lineage rows.
+
+    ``continuous=None`` drains everything currently available and
+    stops (availableNow: the pattern for scheduled/triggered runs —
+    reference: ScheduledEvent daily runs,
+    etl:events/ScheduledEvent.scala:25-47); an interval string such as
+    ``"30 seconds"`` runs until stopped on that processingTime trigger.
 
     ``transform_sql`` is the qwery-style SELECT-transform stage between
     source and sink (reference: SELECT ... INTO with projections /
@@ -332,12 +360,17 @@ def run_stream(
     epoch left unapplied so a corrected re-stage can reuse it — and
     its raw events land under ``rejected_dir``/epoch=… when given
     (the window-level dead-letter queue, beside quarantine_dir's
-    row-level one). Decisions are recorded in StreamRun.wap. A
+    row-level one). Each decision is logged as a ``{"wap": …}`` JSON
+    line on this module's logger and recorded in StreamRun.wap. A
     concurrent maintenance commit between fork and publish triggers a
-    re-stage (the branch is recomputed against the new head)."""
-    events = stream_events(
-        spark, events_dir, max_files_per_trigger, min_ordinal=min_ordinal
-    )
+    re-stage (the branch is recomputed against the new head).
+
+    StreamRun's ``results``, ``wap`` and ``maintenance`` lists keep the
+    last RUN_HISTORY epochs only; the lineage dir is the full record."""
+    if isinstance(events, str):
+        events = stream_events(
+            spark, events, max_files_per_trigger, min_ordinal=min_ordinal
+        )
     run = StreamRun(query=None)  # populated below
     # resolved lazily INSIDE the first batch: the checkpoint's metadata
     # (and thus the query id) exists only once the query has started
@@ -361,7 +394,6 @@ def run_stream(
                 epoch_id=epoch_id,
                 quarantine_dir=quarantine_dir,
                 lineage_dir=lineage_dir,
-                collect_stats=collect_stats,
                 run_id=run_id,
             )
 
@@ -372,13 +404,13 @@ def run_stream(
                 spark, table, _apply, audit_sql, run_id, epoch_id,
                 df, rejected_dir, run.wap,
             )
-        run.results.append(res)
+        _record(run.results, res)
         # state-driven maintenance: compact when the manifest says a
         # bucket's file count crossed the read-amplification bound —
         # skew-aware (hot buckets compact early, cold ones never), the
         # preferred mode over the fixed cadence below
         if compaction_policy is not None and not res.merge.skipped:
-            run.maintenance.append(maybe_compact(spark, table, compaction_policy))
+            _record(run.maintenance, maybe_compact(spark, table, compaction_policy))
         # periodic MOR compaction keeps the delta-file count (and thus
         # read-side resolution cost) bounded during long tails
         if (
@@ -404,8 +436,10 @@ def run_stream(
     writer = events.writeStream.foreachBatch(_batch).option(
         "checkpointLocation", checkpoint_dir
     )
-    if available_now:
+    if continuous is None:
         writer = writer.trigger(availableNow=True)
+    else:
+        writer = writer.trigger(processingTime=continuous)
     run.query = writer.start()
     return run
 

@@ -13,12 +13,14 @@ from qwery_spark.streaming.stream import parse_kafka_events
 
 from tests.helpers import assert_state_equals_oracle
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def test_run_ingest_entrypoint(spark, tmp_table_dir):
     events = make_events(2000, seed=97)
     ev_dir = os.path.join(tmp_table_dir, "events")
     write_event_chunks(events, ev_dir, 4)
-    sys.path.insert(0, "/root/repo/jobs")
+    sys.path.insert(0, os.path.join(REPO, "jobs"))
     import run_ingest
 
     rc = run_ingest.main([

@@ -138,7 +138,7 @@ def test_continuous_trigger_picks_up_late_files(spark, tmp_table_dir):
     tbl = LakeTable.create(os.path.join(tmp_table_dir, "tbl"), TARGET_SCHEMA, n_buckets=4,
                            write_mode="mor")
     run = run_stream(spark, tbl, ev_dir, os.path.join(tmp_table_dir, "ckpt"),
-                     available_now=False, max_files_per_trigger=4)
+                     continuous="0 seconds", max_files_per_trigger=4)
     try:
         deadline = time.monotonic() + 120
         while time.monotonic() < deadline and sum(r.rows_in for r in run.results) < 600:
@@ -153,6 +153,59 @@ def test_continuous_trigger_picks_up_late_files(spark, tmp_table_dir):
         run.query.stop()
     assert sum(r.rows_in for r in run.results) == 1200
     assert_state_equals_oracle(spark, tbl, events.to_pandas())
+
+
+def test_stream_run_lists_keep_last_epochs(spark, tmp_table_dir, monkeypatch, caplog):
+    """StreamRun's per-epoch lists are bounded to the last RUN_HISTORY
+    epochs, while every WAP decision still reaches the module logger."""
+    import json
+    import logging
+
+    from qwery_spark.lake.maintenance import CompactionPolicy
+    from qwery_spark.streaming import stream
+
+    monkeypatch.setattr(stream, "RUN_HISTORY", 2)
+    events, ev_dir, paths, tbl = _setup(tmp_table_dir, n_events=1000, n_chunks=5, seed=41)
+    with caplog.at_level(logging.INFO, logger=stream.__name__):
+        run = run_stream(spark, tbl, ev_dir, os.path.join(tmp_table_dir, "ckpt"),
+                         audit_sql="SELECT 1 FROM staged WHERE 1 = 0",
+                         compaction_policy=CompactionPolicy(max_files_per_bucket=64))
+        run.query.awaitTermination(300)
+    assert run.query.exception() is None
+    assert [r.epoch_id for r in run.results] == [3, 4]
+    assert [w["epoch_id"] for w in run.wap] == [3, 4]
+    assert len(run.maintenance) == 2
+    logged = [json.loads(r.getMessage())["wap"] for r in caplog.records
+              if r.name == stream.__name__]
+    assert [w["epoch_id"] for w in logged] == [0, 1, 2, 3, 4]
+    assert all(w["published"] for w in logged)
+    assert_state_equals_oracle(spark, tbl, events.to_pandas())
+
+
+def test_stream_dataframe_events_per_partition_lineage(spark, tmp_table_dir):
+    """A ready streaming frame carrying _partition (the kafka tail's
+    shape) streams like a directory and yields, per epoch, one lineage
+    row per source partition plus the batch-total row."""
+    from pyspark.sql import functions as F
+
+    from qwery_spark.streaming.stream import stream_events
+
+    events, ev_dir, paths, tbl = _setup(tmp_table_dir, n_events=2000, n_chunks=4, seed=43)
+    df = stream_events(spark, ev_dir, max_files_per_trigger=2).withColumn(
+        "_partition", (F.col("ordinal") % 3).cast("int"))
+    lin_dir = os.path.join(tmp_table_dir, "lineage")
+    run = run_stream(spark, tbl, df, os.path.join(tmp_table_dir, "ckpt"),
+                     lineage_dir=lin_dir)
+    run.query.awaitTermination(300)
+    assert run.query.exception() is None
+    assert len(run.results) == 2  # 4 files / 2 per trigger
+    assert_state_equals_oracle(spark, tbl, events.to_pandas())
+    lin = read_lineage(spark, lin_dir).toPandas()
+    for _epoch, rows in lin.groupby("epoch_id"):
+        assert sorted(rows["partition"]) == [-1, 0, 1, 2]
+        total = rows[rows.partition == -1].iloc[0]
+        assert rows[rows.partition >= 0]["rows_in"].sum() == total["rows_in"]
+    assert lin[lin.partition == -1]["rows_in"].sum() == events.num_rows
 
 
 def test_stream_maintenance_bounds_log_and_files(spark, tmp_table_dir):

@@ -24,9 +24,9 @@ Workloads (third arg):
            stay additive) and bounds delta accumulation. The
            row-group-level win sorting enables (exact key-set In
            pushdown inside big sorted files) needs a deep base to
-           amortize the key-read job — measured separately by
-           tools/keyprune_bench.py (2.4x at 8M rows / 100-key window);
-           at THIS bench's scale the gate (changes._KEY_SET_MIN_KEPT_
+           amortize the key-read job — measured separately in
+           BASELINE.md "Round-5: changelog diff pruning" (2.4x at 8M
+           rows / 100-key window); at THIS bench's scale the gate (changes._KEY_SET_MIN_KEPT_
            ROWS) correctly keeps the key-set layer off.
 
 Run: python tools/ivm_bench.py [windows] [inserts_per_window] [workload]
@@ -258,7 +258,7 @@ def main():
             "policy_clustered_at_windows": clustered_at,
             "wall_ms": walls,
             "flatness_second_over_first": {
-                # skip window 0 (JIT) like flatcost_bench
+                # skip window 0 (JIT warm-up)
                 k: round(med(v[half:]) / med(v[1:half]), 3)
                 for k, v in walls.items()
             },
